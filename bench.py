@@ -1,6 +1,6 @@
 """Benchmark harness — runs the headline graph queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the usable cores) and prints ONE JSON line:
 
   {"metric": ..., "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": ..., ...extras}
@@ -30,7 +30,7 @@ from hugegraph_computer_spark.algorithms import (
 )
 from hugegraph_computer_spark.engine import PregelRunner
 from hugegraph_computer_spark.graph import Graph, transcripts_from_events
-from hugegraph_computer_spark.session import get_spark
+from hugegraph_computer_spark.session import default_cpus, get_spark
 
 
 def _read_steal() -> tuple[int, int]:
@@ -132,7 +132,7 @@ def main() -> None:
         return
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     expand = int(os.environ.get("SPARK_GRAFT_EXPAND", "1"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 

@@ -25,7 +25,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
-from hugegraph_computer_spark.session import get_spark
+from hugegraph_computer_spark.session import default_cpus, get_spark
 
 # oracle-gated queries outside bench.py's suite, cheap enough to time
 # at sf0.01+ (stream_edge_derivation excluded: its wall is dominated by
@@ -74,7 +74,7 @@ def _read_steal():
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     repeats = int(os.environ.get("SPARK_GRAFT_EXTRA_REPEATS", "2"))
     names = sys.argv[1:] or DEFAULT
 

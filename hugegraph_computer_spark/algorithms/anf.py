@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.algorithms.louvain import _pin
+from hugegraph_computer_spark.engine.rounds import pin
 
 # Register seeds hash the STRING vertex id via md5 — the same portable
 # hash the walk/dedup pipelines use (Spark conv(substr(md5..)) ==
@@ -75,7 +75,7 @@ def anf_exact(
     """Exact N(v, h) for h in 1..hops as (id, hops, reach). Materializes
     every h-hop ball — see module docstring for why this mode must stay
     on bounded-ball subgraphs (default: reply chains)."""
-    re = _pin(_sym(graph.edges, etypes))
+    re, _ = pin(_sym(graph.edges, etypes))
     ball = graph.vertices.select(
         F.col("id").alias("v"), F.col("id").alias("u")
     )
@@ -86,7 +86,7 @@ def anf_exact(
                 "v", F.col("dst").alias("u")
             )
         )
-        ball = _pin(grown.dropDuplicates(["v", "u"]))
+        ball, _ = pin(grown.dropDuplicates(["v", "u"]))
         per_hop.append(
             ball.groupBy(F.col("v").alias("id")).agg(
                 F.count("*").alias("reach")
@@ -126,8 +126,8 @@ def anf_sketch(graph, hops: int = 3, k: int = 8) -> DataFrame:
     bit_or E-shuffle per hop. Deterministic: the register seeds are
     md5 hashes of the vertex id, so there is no randomness to seed and
     no global id-assignment step (seeding is a pure projection)."""
-    und = _pin(_sym(graph.edges, None))
-    state = _pin(graph.vertices.selectExpr("id", *_seed_exprs(k)))
+    und, _ = pin(_sym(graph.edges, None))
+    state, _ = pin(graph.vertices.selectExpr("id", *_seed_exprs(k)))
     per_hop = []
     for h in range(1, hops + 1):
         msgs = (
@@ -135,7 +135,7 @@ def anf_sketch(graph, hops: int = 3, k: int = 8) -> DataFrame:
             .groupBy(F.col("dst").alias("id"))
             .agg(*[F.expr(f"bit_or(r{j})").alias(f"m{j}") for j in range(k)])
         )
-        state = _pin(
+        state, _ = pin(
             state.join(msgs, "id", "left").selectExpr(
                 "id",
                 *[

@@ -131,19 +131,16 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
     the shared SQL oracle). This is the formulation to run at 10^12-turn
     scale (for the sampled-source estimator, which BFS-restricts the
     frontier too, see betweenness_brandes_sampled)."""
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.rounds import cut
 
     e = g.edges.select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
     ).distinct().persist()
 
-    # round-6 round plumbing (same shape closeness got): each frame is
-    # a lazy lineage cut whose materializing count doubles as the
-    # emptiness check — replaces one eager-checkpoint pass + one
-    # isEmpty job per frame per round. Values unchanged: only the
-    # materialization timing moves.
+    # each frame is a lazy lineage cut whose materializing count doubles
+    # as the emptiness check (one action per frame per round)
     # hop-level BFS with path counts; `reach` accumulates finalized rows
-    frontier, n = cut_counted(
+    frontier, r = cut(
         e.where(F.col("e_src") != F.col("e_dst")).select(
             F.col("e_src").alias("s"),
             F.col("e_dst").alias("v"),
@@ -151,6 +148,7 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
             F.lit(1).cast("long").alias("sigma"),
         )
     )
+    n = r["rows"]
     reach = frontier
     rounds = 1
     while rounds < max_rounds and n > 0:
@@ -164,7 +162,7 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
         seen = reach.select("s", F.col("v").alias("v2")).withColumn(
             "_seen", F.lit(True)
         )
-        frontier, n = cut_counted(
+        frontier, r = cut(
             nxt.join(seen, ["s", "v2"], "left")
             .where(F.col("_seen").isNull())
             .select(
@@ -174,6 +172,7 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
                 "sigma",
             )
         )
+        n = r["rows"]
         if n == 0:
             break
         # lazy cut: materialized inside the next round's frontier count
@@ -228,15 +227,14 @@ def betweenness_brandes_sampled(
     pairs — so sample_rate=1.0 reproduces betweenness_brandes values
     EXACTLY (pytest-asserted), and any rate matches the SQL oracle's
     source-filtered triple join."""
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.rounds import cut
 
     e = g.edges.select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
     ).distinct().persist()
 
-    # round-6 round plumbing: lazy cuts + count-as-emptiness-check, as
-    # in betweenness_brandes above (values unchanged)
-    frontier, n = cut_counted(
+    # lazy cuts + count-as-emptiness-check, as in betweenness_brandes
+    frontier, r = cut(
         e.where(F.col("e_src") != F.col("e_dst"))
         .where(source_sample_predicate(F.col("e_src"), sample_rate))
         .select(
@@ -245,6 +243,7 @@ def betweenness_brandes_sampled(
             F.lit(1).cast("long").alias("sigma"),
         )
     )
+    n = r["rows"]
     levels: list[DataFrame] = [frontier]  # levels[d-1] = frontier at dist d
     seen = frontier.select("s", "v").localCheckpoint(eager=False)
     while len(levels) < max_rounds and n > 0:
@@ -254,7 +253,7 @@ def betweenness_brandes_sampled(
             .groupBy("s", F.col("e_dst").alias("v2"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt, n = cut_counted(
+        nxt, r = cut(
             nxt.join(
                 seen.withColumnRenamed("v", "v2").withColumn("_seen", F.lit(True)),
                 ["s", "v2"],
@@ -263,6 +262,7 @@ def betweenness_brandes_sampled(
             .where(F.col("_seen").isNull())
             .select("s", F.col("v2").alias("v"), "sigma")
         )
+        n = r["rows"]
         if n == 0:
             break
         frontier = nxt

@@ -41,51 +41,34 @@ formulation loses at 100-TB scale: on the sf0.1 graph this converges in
 are scheduler-floor-bound, so the walls are comparable; the win is the
 shuffle-round count, which dominates once each scatter is minutes of
 cluster work.
-Lineage is cut per round through the AQE-safe persist->checkpoint pin
-(see `louvain._pin`) because the round plan (two joins + agg) is the
-complex-plan shape where static post-checkpoint planning was measured
-~60x slower.
+
+The symmetrized edges are pinned once (engine/rounds.pin); each round
+runs through the engine's RoundLoop: one lazy lineage cut whose single
+agg action also counts the changed labels.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.algorithms.louvain import _pin
-from hugegraph_computer_spark.engine.pin import static_plan_scope
-from hugegraph_computer_spark.engine.superstep import PregelRunner
+from hugegraph_computer_spark.engine.rounds import RoundLoop, pin
 
 
 @dataclass
 class CCResult:
     labels: DataFrame  # (id, comp) — comp = min id of the component
     rounds: int
-
-
-def _pin_changed(df: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize a round's (id, comp, changed) lineage-free and
-    collect the changed-count — ONE Spark action total.
-
-    Round-6 shape: a lazy localCheckpoint under AQE converts the round
-    plan adaptively (join strategies still runtime-chosen; the
-    conversion itself executes the shuffle stages), and the agg action
-    then materializes the checkpointed RDD while computing the count.
-    This replaces the earlier persist -> agg -> eager-checkpoint ->
-    unpersist dance, which stored every round twice (columnar cache +
-    checkpoint blocks) and paid an extra full-pass job per round."""
-    df = df.localCheckpoint(eager=False)
-    changed = df.agg(F.sum(F.col("changed").cast("long"))).collect()[0][0]
-    return df, int(changed or 0)
+    history: list[dict[str, Any]]  # RoundLoop per-round records
+    metrics: dict[str, Any]  # halt_reason, planner, seconds
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected view: src->dst plus the mirror. Duplicates are
-    harmless under min-combine, so no distinct shuffle. Shared by the
-    engine loop and tools/dump_plans.py so the dumped round plan cannot
-    drift from what the engine runs."""
+    harmless under min-combine, so no distinct shuffle."""
     e = edges.select("src", "dst")
     return e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
@@ -95,7 +78,8 @@ def symmetrize(edges: DataFrame) -> DataFrame:
 def cc_round(sym: DataFrame, state: DataFrame) -> DataFrame:
     """One relax+notify+jump round: (id, comp) -> (id, comp, changed).
     Exactly one E-sized shuffle (the relax scatter) plus two V-sized
-    (id, comp) shuffles — the plan shape docs/PLANS.md dumps."""
+    (id, comp) shuffles; tests/test_plan_shape.py pins the live
+    Exchange counts."""
     # relax: one hop of reference message passing (min combiner)
     nbr = (
         sym.join(state, sym["src"] == state["id"])
@@ -150,27 +134,34 @@ def connected_components(graph, max_rounds: int = 50) -> CCResult:
     the mirrored rows harmlessly but pointlessly).
     """
     # pin the symmetrized view once: every round's relax join then scans
-    # a lineage-free RDD instead of re-planning the union-of-projections
-    # (and, when graph.edges itself is unpinned, its whole derivation)
-    sym = _pin(symmetrize(graph.edges))
+    # a lineage-free RDD instead of re-planning the union-of-projections.
+    # Its row count (~2x the directed edges) is what the rounds iterate,
+    # so it is what the planner reads.
+    sym, n_sym = pin(symmetrize(graph.edges))
 
     state = graph.vertices.select("id", F.col("id").alias("comp"))
-    rounds = 0
-    # Same data-derived planner decision as the Pregel runner: when the
-    # per-round data is too small to amortize AQE's per-stage job
-    # scheduling, run the rounds statically at a derived partition count
-    # (None -> no-op scope, AQE behavior unchanged). Round counts are
-    # value-driven (exact integer changed-count), so they cannot move.
-    spark = graph.vertices.sparkSession
-    static_p = PregelRunner._static_step_partitions(graph, spark)
-    with static_plan_scope(spark, static_p):
-        while rounds < max_rounds:
-            rounds += 1
-            state, changed = _pin_changed(cc_round(sym, state))
-            if changed == 0:
-                break
+    # round counts are value-driven (exact integer changed-count), so
+    # the planner decision cannot move them
+    loop = RoundLoop(
+        "wcc_fast",
+        graph.vertices.sparkSession,
+        max_rounds=max_rounds,
+        rows=n_sym,
+        partitions=graph.partitions,
+    )
+    with loop:
+        for _ in loop:
+            state, row = loop.cut(
+                cc_round(sym, state), changed=F.sum(F.col("changed").cast("long"))
+            )
+            loop.finish(converged=row["changed"] == 0)
 
-    return CCResult(labels=state.select("id", "comp"), rounds=rounds)
+    return CCResult(
+        labels=state.select("id", "comp"),
+        rounds=loop.round + 1,
+        history=loop.history,
+        metrics=loop.metrics,
+    )
 
 
 def wcc_fast(graph, max_rounds: int = 50) -> DataFrame:

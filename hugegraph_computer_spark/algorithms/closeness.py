@@ -62,14 +62,14 @@ def closeness_centrality(
         frontier = frontier.where(
             source_sample_predicate(F.col("start"), sample_rate)
         )
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.rounds import cut
 
-    # round-6 round plumbing: lazy lineage cuts whose materializing
-    # count doubles as the emptiness check — replaces one eager
-    # checkpoint pass + one isEmpty job per frame per round
-    frontier, n_frontier = cut_counted(
+    # lazy lineage cuts whose materializing count doubles as the
+    # emptiness check (one action per frame per round)
+    frontier, r = cut(
         frontier.groupBy("id", "start").agg(F.min("dist").alias("dist"))
     )
+    n_frontier = r["rows"]
 
     dists = frontier  # accumulated per-(vertex,start) minima
     rounds = 0
@@ -90,11 +90,12 @@ def closeness_centrality(
         cand = fwd.groupBy("id", "start").agg(F.min("dist").alias("dist"))
         # keep only true improvements vs accumulated state
         old = dists.select("id", "start", F.col("dist").alias("old"))
-        improved, n_frontier = cut_counted(
+        improved, r = cut(
             cand.join(old, ["id", "start"], "left")
             .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
             .select("id", "start", "dist")
         )
+        n_frontier = r["rows"]
         if n_frontier == 0:
             break
         # lazy cut: materialized by the next round's improvement join

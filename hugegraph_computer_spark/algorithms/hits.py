@@ -22,31 +22,31 @@ Scale design: per round exactly TWO E-sized shuffles (the dst-keyed
 auth gather, then the src-keyed hub gather) plus two V-sized left
 joins back to the vertex frame — the same per-superstep shuffle budget
 as PageRank, so every scaling measurement in BENCH/BASELINE.md carries
-over. Both L2 norms are driver-collected in a SINGLE union-agg action
-per round (normalization factors cancel through the linear gathers —
-see the loop comment) and folded back as literals, so the round plan
-stays constant-size; lineage is cut once per round through the
-AQE-safe persist->checkpoint pin (louvain._pin). No Python UDFs, no
-driver-side row loops.
+over. Rounds run through the engine's RoundLoop: the UNNORMALIZED
+round state is lineage-cut, and the cut's one agg action also yields
+both L2 norms (normalization factors cancel through the linear gathers
+— see the loop comment), which fold back as literals, so the round
+plan stays constant-size. No Python UDFs, no driver-side row loops.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.algorithms.louvain import _pin
-from hugegraph_computer_spark.engine.pin import static_plan_scope
-from hugegraph_computer_spark.engine.superstep import PregelRunner
+from hugegraph_computer_spark.engine.rounds import RoundLoop, pin
 
 
 @dataclass
 class HitsResult:
     state: DataFrame  # (id, auth, hub), both L2-normalized
     supersteps: int
+    history: list[dict[str, Any]]  # RoundLoop per-round records
+    metrics: dict[str, Any]  # halt_reason, planner, seconds
 
 
 def hits(graph, supersteps: int = 10) -> HitsResult:
@@ -54,65 +54,64 @@ def hits(graph, supersteps: int = 10) -> HitsResult:
     graph.edges' distinct (src, dst) pairs. Returns L2-normalized
     scores for every vertex.
 
-    Round plumbing (round 6, the PageRank pattern): the two gather
-    frames and the new state are LAZY localCheckpoints — lineage-free,
-    and all three materialize into checkpoint blocks under the round's
-    single norms-collect job (braw roots at araw's RDD; the next
-    round's gather reads the stored state). This replaced a
-    persist → collect → eager-pin → unpersist dance that paid ~5 Spark
-    jobs and a double store per round (bench_extra: hits10 at sf0.01
-    went from 22.0 s to the re-measured figure in OPTIMIZATION_r06.md).
+    The two gather frames are lazy lineage cuts that materialize, with
+    the round state, inside the round's single agg action (braw roots
+    at araw's RDD; the next round's gather reads the stored state).
     """
-    de = _pin(graph.edges.select("src", "dst").dropDuplicates(["src", "dst"]))
+    # the deduplicated edges are what every round iterates, so their
+    # count (not the directed multi-edge count) feeds the planner
+    de, n_de = pin(graph.edges.select("src", "dst").dropDuplicates(["src", "dst"]))
     vertices = graph.vertices.select("id")
     state = vertices.select(
         "id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
     )
-    # same data-derived planner decision as the Pregel runner: static
-    # rounds at a derived partition count when the per-round data is
-    # floor-bound, AQE (no-op scope) otherwise — see engine/superstep.py
-    spark = graph.vertices.sparkSession
-    static_p = PregelRunner._static_step_partitions(graph, spark)
-    with static_plan_scope(spark, static_p):
-        for _ in range(supersteps):
+    loop = RoundLoop(
+        "hits",
+        graph.vertices.sparkSession,
+        max_rounds=supersteps,
+        rows=n_de,
+        partitions=graph.partitions,
+    )
+    with loop:
+        for _ in loop:
             # Normalization scalars cancel through the linear gathers:
             #   auth_t = A_t/||A_t||  with A_t   = gather_in(hub_{t-1})
             #   hub_t  = B_t/||B_t||  with B_t   = gather_out(auth_t)
             #                              = gather_out(A_t)/||A_t||
-            # so BOTH gathers run on unnormalized sums and the round needs
-            # ONE driver collect (both L2 norms in a single union-agg job,
-            # like the runner's per-superstep aggregator collect).
+            # so BOTH gathers run on unnormalized sums, and both norms
+            # are aggregates of the cut unnormalized state.
             araw = _gather(de, state.select("id", "hub"), "src", "dst", "hub")
             braw = _gather(
                 de, araw.withColumnRenamed("_s", "auth"), "dst", "src", "auth"
             )
-            # each agg row is tagged with a literal side key and unpacked
-            # BY KEY — the row order of a unioned collect is plan-order
-            # today but contracted nowhere, and a silent a/b swap would
-            # flip hub/auth normalization
-            norms = (
-                araw.agg(F.sqrt(F.sum(F.col("_s") * F.col("_s"))).alias("n"))
-                .select(F.lit("a").alias("side"), "n")
-                .unionAll(
-                    braw.agg(F.sqrt(F.sum(F.col("_s") * F.col("_s"))).alias("n"))
-                    .select(F.lit("b").alias("side"), "n")
-                )
-                .collect()
-            )
-            # edgeless graph: empty gathers sum to NULL -> keep zero scores
-            by_side = {r["side"]: float(r["n"] or 1.0) for r in norms}
-            na, nb = by_side["a"], by_side["b"]
-            state = (
+            raw, row = loop.cut(
                 vertices.join(araw.withColumnRenamed("_s", "_a"), "id", "left")
                 .join(braw.withColumnRenamed("_s", "_b"), "id", "left")
                 .select(
                     "id",
-                    (F.coalesce(F.col("_a"), F.lit(0.0)) / F.lit(na)).alias("auth"),
-                    (F.coalesce(F.col("_b"), F.lit(0.0)) / F.lit(nb)).alias("hub"),
-                )
-                .localCheckpoint(eager=False)
+                    F.coalesce(F.col("_a"), F.lit(0.0)).alias("_a"),
+                    F.coalesce(F.col("_b"), F.lit(0.0)).alias("_b"),
+                ),
+                na=_l2("_a"),
+                nb=_l2("_b"),
             )
-    return HitsResult(state=state, supersteps=supersteps)
+            # edgeless graph: all-zero sums -> keep zero scores
+            state = raw.select(
+                "id",
+                (F.col("_a") / F.lit(row["na"] or 1.0)).alias("auth"),
+                (F.col("_b") / F.lit(row["nb"] or 1.0)).alias("hub"),
+            )
+            loop.finish()
+    return HitsResult(
+        state=state,
+        supersteps=loop.round + 1,
+        history=loop.history,
+        metrics=loop.metrics,
+    )
+
+
+def _l2(c: str):
+    return F.sqrt(F.sum(F.col(c) * F.col(c)))
 
 
 def _gather(

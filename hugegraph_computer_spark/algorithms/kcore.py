@@ -26,12 +26,9 @@ from hugegraph_computer_spark.engine.superstep import StepOutput, VertexProgram
 
 class KCore(VertexProgram):
     name = "kcore"
-    # round-6: deletion notices go to ALL out-edges of newly-peeled
-    # vertices, so the in-flight message count is EXACTLY Σ outdeg over
-    # the just_deleted frontier — aggregated in the runner's one agg
-    # pass; the per-superstep count job + message checkpoint are
-    # dropped (guide §2.4)
-    needs_message_count = False
+    # deletion notices go to ALL out-edges of newly-peeled vertices, so
+    # the in-flight message count is EXACTLY Σ outdeg over the
+    # just_deleted frontier — aggregated in the runner's one agg pass
 
     def __init__(self, k: int = 3, max_supersteps: int = 100):
         # kcore.k default 3 (KCore.java:32-33)

@@ -43,12 +43,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_EPS = 1e-12
+from hugegraph_computer_spark.engine.rounds import pin
 
-# canonical implementation moved to engine.pin (round 6: the same pin
-# now also truncates the graph builder's base tables); re-exported here
-# because cc_fast/truss/hits import louvain._pin
-from hugegraph_computer_spark.engine.pin import pin as _pin  # noqa: E402
+_EPS = 1e-12
 
 
 def _undirected_adj(edges: DataFrame) -> DataFrame:
@@ -117,7 +114,7 @@ def _local_move_phase(
     nbr = adj.where(F.col("src") != F.col("dst"))  # self-loops fixed wrt moves
     k = _degrees(adj).persist()
     m2 = k.agg(F.sum("k")).collect()[0][0]
-    comm = _pin(k.select("id", F.col("id").alias("c")))
+    comm, _ = pin(k.select("id", F.col("id").alias("c")))
 
     total_moves = 0
     idle_rounds = 0
@@ -175,7 +172,7 @@ def _local_move_phase(
             continue
         idle_rounds = 0
         total_moves += n_moves
-        comm = _pin(
+        comm, _ = pin(
             comm.join(best, "id", "left")
             .select("id", F.coalesce("c_new", "c").alias("c"))
         )
@@ -221,7 +218,7 @@ def louvain(
             membership = comm
         else:
             lift = comm.select(F.col("id").alias("c"), F.col("c").alias("c2"))
-            membership = _pin(
+            membership, _ = pin(
                 membership.join(lift, "c").select("id", F.col("c2").alias("c"))
             )
         q = modularity(adj0, membership)
@@ -231,7 +228,7 @@ def louvain(
             prev_q = max(prev_q, q)
             break
         prev_q = q
-        adj = _pin(_coarsen(adj, comm))
+        adj, _ = pin(_coarsen(adj, comm))
 
     # deterministic labels: community := min original member id;
     # isolated vertices (no adjacency rows) are their own singleton

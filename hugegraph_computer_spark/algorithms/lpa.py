@@ -31,9 +31,8 @@ bounds the winner agg's input.
 Halt accounting (round-6 optimization, guide §2.4): voters rebroadcast
 to ALL out-edges, so the in-flight message count is EXACTLY
 Σ outdeg over the `sent` frontier — an aggregate over the state the
-runner already collects in its one agg pass. The per-superstep
-message-count JOB (and the message checkpoint feeding it) is dropped
-(`needs_message_count = False`); the halt rule is value-identical.
+runner already collects in its one agg pass, so no per-superstep
+message-count job runs; the halt rule is value-identical.
 """
 
 from __future__ import annotations
@@ -46,9 +45,6 @@ from hugegraph_computer_spark.engine.superstep import StepOutput, VertexProgram
 
 class Lpa(VertexProgram):
     name = "lpa"
-    # halt from state aggregates (expected_msgs) — exact: senders
-    # rebroadcast to ALL out-edges, so count == Σ outdeg over senders
-    needs_message_count = False
 
     def __init__(self, max_supersteps: int = 10):
         self.max_supersteps = max_supersteps

@@ -40,9 +40,6 @@ from hugegraph_computer_spark.engine.superstep import StepOutput, VertexProgram
 
 class PageRank(VertexProgram):
     name = "page_rank"
-    # halt is L1-based (master), never on message count -> the runner can
-    # skip the per-superstep count job entirely (1 Spark job/superstep)
-    needs_message_count = False
 
     def __init__(
         self,
@@ -82,7 +79,9 @@ class PageRank(VertexProgram):
             self._deg = g.out_degrees()
 
     def superstep0(self, g) -> StepOutput:
-        init = 1.0 / self._n
+        # an empty graph has no ranks to seed; its one superstep halts
+        # on the empty state
+        init = 1.0 / self._n if self._n else 0.0
         state = self._deg.select(
             "id",
             "outdeg",

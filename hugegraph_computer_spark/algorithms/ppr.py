@@ -38,7 +38,6 @@ from hugegraph_computer_spark.engine.superstep import StepOutput, VertexProgram
 
 class PersonalPageRank(VertexProgram):
     name = "ppr"
-    needs_message_count = False
 
     def __init__(
         self,
@@ -96,7 +95,10 @@ class PersonalPageRank(VertexProgram):
         return {"cumulative_rank": F.sum(rank_if), "l1_diff": F.sum(diff_if)}
 
     def superstep(self, s, g, state, messages, aggs) -> StepOutput:
-        cum_prev = aggs["cumulative_rank"]
+        # no rank mass in the previous superstep (no computing vertex,
+        # or a source absent from the graph): keep the ranks unscaled
+        # instead of dividing by zero
+        cum_prev = aggs["cumulative_rank"] or 1.0
         incoming = messages.groupBy("dst").agg(F.sum("msg").alias("msg_sum"))
         joined = state.join(incoming, state["id"] == incoming["dst"], "left")
         received = F.col("msg_sum").isNotNull()

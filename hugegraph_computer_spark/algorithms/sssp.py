@@ -29,11 +29,9 @@ INF = float("inf")
 
 class Sssp(VertexProgram):
     name = "sssp"
-    # round-6: the frontier scatters to ALL out-edges, so the in-flight
-    # message count is EXACTLY Σ outdeg over the changed frontier — an
-    # aggregate in the runner's one agg pass; the per-superstep count
-    # job + message checkpoint are dropped (guide §2.4)
-    needs_message_count = False
+    # the frontier scatters to ALL out-edges, so the in-flight message
+    # count is EXACTLY Σ outdeg over the changed frontier — an aggregate
+    # in the runner's one agg pass
 
     def __init__(self, sources: list[str], max_supersteps: int = 200):
         self.sources = list(sources)

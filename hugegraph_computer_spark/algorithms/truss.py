@@ -26,8 +26,8 @@ recomputed INSIDE the shrinking subgraph, so the degree agg + wedge
 join re-run per peel round. Per round: one V-sized degree agg, one
 self-join shuffle, one membership semi-join + one support aggregation,
 all JVM-side; the round result is lineage-cut lazily and the
-materializing count doubles as the convergence check (engine/pin
-cut_counted — one action, one store per round). Removal cascades terminate in a handful of rounds in
+materializing count doubles as the convergence check (engine/rounds
+cut — one action, one store per round). Removal cascades terminate in a handful of rounds in
 practice (peeling only re-examines survivors); `max_rounds` bounds the
 loop defensively and WARNS when exhausted before the fixpoint.
 
@@ -45,7 +45,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.engine.pin import cut_counted
+from hugegraph_computer_spark.engine.rounds import cut
 
 
 @dataclass
@@ -109,21 +109,21 @@ def ktruss(graph, k: int = 4, max_rounds: int = 30) -> TrussResult:
     support measured inside the final subgraph, plus the round count."""
     if k < 3:
         raise ValueError(f"k-truss needs k >= 3, got {k}")
-    edges, n_edges = cut_counted(
+    edges, r = cut(
         graph.undirected_single()
         .edges.where(F.col("src") < F.col("dst"))
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
+    n_edges = r["rows"]
     rounds = 0
     survivors = edges.withColumn("support", F.lit(0).cast("long")).limit(0)
     while rounds < max_rounds:
         rounds += 1
         # edges with zero triangles fall out of the aggregation and are
         # thereby dropped — correct for every k >= 3 (0 < k-2); the
-        # pin's materializing count doubles as the convergence check
-        survivors, n_new = cut_counted(
-            _wedge_support(edges).where(F.col("support") >= k - 2)
-        )
+        # the cut's materializing count doubles as the convergence check
+        survivors, r = cut(_wedge_support(edges).where(F.col("support") >= k - 2))
+        n_new = r["rows"]
         if n_new == n_edges:  # survivors ⊆ edges, so equal count = fixpoint
             break
         n_edges = n_new

@@ -33,10 +33,8 @@ Halt accounting (round-6 optimization, guide §2.4 "remove shuffles/jobs
 outright"): vertices rebroadcast to ALL out-edges when they adopt a
 smaller label (s >= 1), so the in-flight message count equals
 Σ outdeg over the changed frontier — an aggregate over the state the
-runner already collects. The per-superstep message-count JOB (plus the
-message checkpoint that fed it) is therefore dropped
-(`needs_message_count = False`); the halt rule is value-identical for
-every superstep >= 1. Superstep 0's scatter filters msg < dst, so its
+runner already collects, so no per-superstep message-count job runs;
+the halt rule is value-identical for every superstep >= 1. Superstep 0's scatter filters msg < dst, so its
 expected count is an overcount — on a graph whose step-0 messages are
 all filtered the loop runs one extra (state-identical) superstep; no
 result changes.
@@ -53,9 +51,6 @@ from hugegraph_computer_spark.engine.superstep import StepOutput, VertexProgram
 
 class Wcc(VertexProgram):
     name = "wcc"
-    # halt is computed from state aggregates (expected_msgs) — no
-    # per-superstep count job, messages stay lazy (consumed exactly once)
-    needs_message_count = False
 
     def __init__(self, max_supersteps: int = 200):
         self.max_supersteps = max_supersteps

@@ -3,9 +3,9 @@ from hugegraph_computer_spark.engine.driver import (
     JobHandle,
     JobStatus,
 )
+from hugegraph_computer_spark.engine.rounds import RoundLoop, RunAborted
 from hugegraph_computer_spark.engine.superstep import (
     PregelRunner,
-    RunAborted,
     RunResult,
     StepOutput,
     VertexProgram,
@@ -16,6 +16,7 @@ __all__ = [
     "JobHandle",
     "JobStatus",
     "PregelRunner",
+    "RoundLoop",
     "RunAborted",
     "RunResult",
     "StepOutput",

@@ -1,27 +1,28 @@
 """Generic BSP superstep runner over DataFrames.
 
 Re-expresses the reference's fixed worker/master pipeline
-(/root/reference/computer-core/.../worker/WorkerService.java:287-338,
-master/MasterService.java:240-288) as a driver-side loop:
+(computer-core/.../worker/WorkerService.java:287-338,
+master/MasterService.java:240-288) as a VertexProgram adapter on the
+engine's one round loop (engine/rounds.py):
 
   superstep s:
     state_s   = program.superstep(s, state_{s-1}, messages_{s-1}, aggs)
-    (materialize: lineage truncated -> the reference's vertex-state
-     double buffer, FileGraphPartition.java:640-661)
-    messages_s = program scatter over state_s (join with edges)
-    aggregates = state_s.agg(...)  -> driver scalars (the reference's
-     worker->master aggregator RPC, Aggregator.java:26-92)
+    cut       = lazy lineage cut of state_s + ONE agg action -> driver
+     scalars (the reference's vertex-state double buffer,
+     FileGraphPartition.java:640-661, and worker->master aggregator RPC,
+     Aggregator.java:26-92)
+    messages_s = program scatter over the cut state_s (lazy; consumed
+     by superstep s+1's action)
     halt check = MasterService.finishedIteration(MasterService.java:353-364):
      master veto | s >= max_supersteps-1 | no messages in flight
 
-Shuffle budget: exactly two shuffles per superstep at steady state —
-the scatter join (state ⋈ edges, co-partitioned when Graph.partitions is
-set, so often shuffle-free on the edges side) and the gather
-groupBy(dst). Message combining (reference R6/R8,
-CombineKvInnerSortFlusher.java:29-45) is Spark's map-side partial
-aggregation — free. At 100 TB the per-superstep working set is the
-vertex-state DataFrame (O(V)) and the message DataFrame (O(E)); both
-are hash-partitioned and spill-safe.
+Shuffle budget: the scatter join (state ⋈ edges) and the gather
+groupBy(dst), plus the join of the gathered messages back onto the
+state; tests/test_plan_shape.py pins the live Exchange counts. Message
+combining (reference R6/R8, CombineKvInnerSortFlusher.java:29-45) is
+Spark's map-side partial aggregation — free. At 100 TB the
+per-superstep working set is the vertex-state DataFrame (O(V)) and the
+message DataFrame (O(E)); both are hash-partitioned and spill-safe.
 
 Durability: every `checkpoint_every` supersteps the runner writes state
 + messages as parquet with a meta.json carrying (superstep, aggregates,
@@ -33,7 +34,6 @@ unimplemented TODO (MasterService.java:337-343).
 from __future__ import annotations
 
 import json
-import math
 import os
 import time
 from collections.abc import Callable
@@ -43,17 +43,11 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.engine.pin import static_plan_scope
+from hugegraph_computer_spark.engine.rounds import RoundLoop, RunAborted
 
-MSG_COUNT = "_message_count"
+__all__ = ["PregelRunner", "RunAborted", "RunResult", "StepOutput", "VertexProgram"]
+
 SUPERSTEP = "_superstep"
-
-
-class RunAborted(RuntimeError):
-    """Raised by the runner when a `should_stop` callback requests
-    termination at a superstep boundary — the driver's preemptive
-    cancel point (checked BEFORE each superstep starts, so a cancel
-    issued right after submit never lets superstep 0 run)."""
 
 
 @dataclass
@@ -77,13 +71,6 @@ class VertexProgram:
     name: str = "vertex_program"
     max_supersteps: int = 10  # bsp.max_super_step default,
     # ComputerOptions.java:478-485
-
-    # True when the halt rule needs the exact in-flight message count
-    # (vote-to-halt programs). Programs that halt on aggregates alone
-    # (PageRank: L1) set False — the runner then skips the per-superstep
-    # count job and lets messages materialize lazily inside the next
-    # superstep's aggregate action (1 Spark job per superstep total).
-    needs_message_count: bool = True
 
     def prepare(self, g) -> None:
         """Called once before the loop, on BOTH fresh and resumed runs —
@@ -117,95 +104,19 @@ class RunResult:
 
 
 class PregelRunner:
-    def __init__(
-        self,
-        checkpoint_dir: str | None = None,
-        checkpoint_every: int = 5,
-        state_mode: str | None = None,
-        truncate_every: int | None = None,
-    ):
+    """The VertexProgram adapter on RoundLoop: one superstep per round,
+    plus checkpoint/resume."""
+
+    def __init__(self, checkpoint_dir: str | None = None, checkpoint_every: int = 5):
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = checkpoint_every
-        # per-superstep state materialization: "lazy" (single-job static
-        # plan, default — measured faster), "aqe" (adaptive-planned
-        # through cache + eager checkpoint), or "cache" (persist-only:
-        # no lineage cut at all — Catalyst's cache manager substitutes
-        # the InMemoryRelation for the state subtree when planning later
-        # supersteps, so the PHYSICAL plan stays shallow while the
-        # analyzed plan nests one level per step); see run()
-        self.state_mode = state_mode or os.environ.get(
-            "SPARK_GRAFT_STATE_MODE", "lazy"
-        )
-        if self.state_mode not in ("lazy", "aqe", "cache"):
-            raise ValueError(
-                "state_mode must be 'lazy', 'aqe' or 'cache', "
-                f"got {self.state_mode!r}"
-            )
-        # lazy mode only: cut lineage every K supersteps instead of every
-        # superstep — attacks the measured 0.51 s/step plan->RDD
-        # conversion floor (BENCH/BASELINE.md round-4 profile) at the
-        # price of a 2^(K-1)-wide uncut plan window whose shuffles
-        # re-execute on every in-window action. A floor knob for
-        # tiny-per-step data; K=1 (always cut) is the default and the
-        # right choice whenever per-step execution dominates.
-        self.truncate_every = int(
-            truncate_every
-            if truncate_every is not None
-            else os.environ.get("SPARK_GRAFT_TRUNCATE_EVERY", "1")
-        )
-        if self.truncate_every < 1:
-            raise ValueError(
-                f"truncate_every must be >= 1, got {self.truncate_every}"
-            )
 
-    # -- step planner ----------------------------------------------------
     @staticmethod
-    def _static_step_partitions(g, spark) -> int | None:
-        """Data-derived choice between AQE and static step planning.
-
-        Under AQE the lazy localCheckpoint's plan->RDD conversion
-        eagerly executes every query stage as its own Spark job
-        (~6 jobs/superstep), which is the measured per-step floor when
-        the per-step data is small (sf0.1 floor profile: 0.89 s/step,
-        0.56 s of it the conversion). A statically planned step is ONE
-        job whose stages pipeline inside the JVM — but at the session's
-        full shuffle-partition count it loses AQE coalescing and pays
-        stages x partitions tiny-task launches (measured 1.59 s/step vs
-        0.88 at p=32, sf0.1). The resolution is to derive the partition
-        count from the data (guide: partitioning scale-adaptive, never a
-        constant): p = ceil(E / rows_per_task). When p < the graph's
-        partition count the per-task work is below task-launch
-        amortization, so the step runs statically at p (measured
-        0.55 s/step at p=4 vs 1.31 AQE in the same window, sf0.1,
-        local[32] — same superstep counts); when p >= partitions the
-        data is large enough to amortize the AQE floor and adaptive
-        planning keeps its runtime-broadcast/coalescing/skew advantages,
-        so the runner keeps today's AQE conversion unchanged.
-
-        Uses the edge count only when the graph ALREADY knows it
-        (captured from a materializing count that ran anyway) — unknown
-        counts never trigger an extra job, they just keep AQE mode.
-        """
-        planner = os.environ.get("SPARK_GRAFT_STEP_PLANNER", "auto")
-        if planner == "aqe":
-            return None
-        ne = getattr(g, "_ne", None)
-        parts = getattr(g, "partitions", None) or spark.sparkContext.defaultParallelism
-        rows_per_task = int(
-            os.environ.get("SPARK_GRAFT_STATIC_ROWS_PER_TASK", "32768")
+    def _read(spark, checkpoint: str, part: str) -> DataFrame:
+        """A checkpointed frame, lineage-cut eagerly (resume path)."""
+        return spark.read.parquet(os.path.join(checkpoint, part)).localCheckpoint(
+            eager=True
         )
-        if ne is None:
-            # forced static without a known count: use the partition count
-            return parts if planner == "static" else None
-        p = max(1, math.ceil(ne / rows_per_task))
-        if planner == "static":
-            return min(p, parts)
-        return p if p < parts else None
-
-    # -- materialization -------------------------------------------------
-    def _materialize(self, df: DataFrame) -> DataFrame:
-        """Eager lineage cut — used on the resume path only."""
-        return df.localCheckpoint(eager=True)
 
     @staticmethod
     def _partition_lineage(df: DataFrame) -> list[dict[str, int]]:
@@ -251,6 +162,13 @@ class PregelRunner:
         )
         return os.path.join(base, steps[-1]) if steps else None
 
+    @staticmethod
+    def _converged(program, s: int, aggs: dict, messages) -> bool:
+        # MasterService.finishedIteration (MasterService.java:353-364):
+        # master veto, or no messages in flight (vote-to-halt); the
+        # round loop adds the superstep cap and the empty-state halt
+        return not program.master_continue(s, aggs) or messages is None
+
     # -- main loop -------------------------------------------------------
     def run(
         self,
@@ -269,225 +187,62 @@ class PregelRunner:
         cancel issued between submit and the first superstep stops the
         run with zero supersteps executed."""
         spark = g.vertices.sparkSession
-        history: list[dict[str, Any]] = []
-        t_run0 = time.monotonic()
-        prev_state = prev_msgs = None
         program.prepare(g)
-
+        # the planner reads the edge count only when the graph already
+        # knows it (from the build's materializing count)
+        loop = RoundLoop(
+            program.name,
+            spark,
+            max_rounds=program.max_supersteps,
+            rows=getattr(g, "_ne", None),
+            partitions=g.partitions,
+            should_stop=should_stop,
+            on_round=on_superstep,
+        )
+        s = -1
+        state = messages = None
+        aggs: dict[str, Any] = {}
         if resume_from:
             with open(os.path.join(resume_from, "meta.json")) as f:
                 meta = json.load(f)
-            s = int(meta["superstep"])
-            state = self._materialize(
-                spark.read.parquet(os.path.join(resume_from, "state"))
-            )
-            messages = None
+            s = loop.round = int(meta["superstep"])
+            state = self._read(spark, resume_from, "state")
             if meta["has_messages"]:
-                messages = self._materialize(
-                    spark.read.parquet(os.path.join(resume_from, "messages"))
-                )
-            aggs = dict(meta["aggregates"])
-            aggs[SUPERSTEP] = s
-            finished = self._finished(program, s, aggs)
-        else:
-            s = -1
-            state = messages = None
-            aggs = {}
-            finished = False
+                messages = self._read(spark, resume_from, "messages")
+            aggs = dict(meta["aggregates"], **{SUPERSTEP: s})
+            loop.decide(self._converged(program, s, aggs, messages))
 
-        # SPARK_GRAFT_STEP_PROFILE=1: record per-phase walls inside each
-        # superstep (plan build / lineage-cut call / action / messages)
-        # to attribute the fixed per-step floor — the lazy
-        # localCheckpoint converts the plan to an RDD at CALL time, so
-        # its cost shows up in "checkpoint", not "action".
-        profile = bool(os.environ.get("SPARK_GRAFT_STEP_PROFILE"))
-        steps_since_cut = 0
-
-        # Data-derived static step planning (see _static_step_partitions):
-        # when the per-step data is too small to amortize AQE's
-        # per-stage job scheduling, run the whole loop statically at a
-        # derived partition count; otherwise this is None and nothing
-        # changes. Scoped to this run and restored in `finally` (the
-        # cooperative-cancel RunAborted path included).
-        static_p = (
-            self._static_step_partitions(g, spark)
-            if self.state_mode == "lazy"
-            else None
-        )
-        # conf handling (save/set/restore + the concurrent-jobs lock)
-        # lives in static_plan_scope; entered manually so the loop body
-        # keeps its existing try/finally structure
-        _scope = static_plan_scope(spark, static_p)
-        _scope.__enter__()
-        try:
-            while not finished:
-                if should_stop is not None and should_stop():
-                    raise RunAborted(
-                        f"{program.name}: stop requested before superstep {s + 1}"
-                    )
-                t0 = time.monotonic()
-                if s < 0:
+        with loop:
+            for s in loop:
+                if s == 0:
                     out = program.superstep0(g)
-                    s = 0
                 else:
-                    s += 1
                     out = program.superstep(s, g, state, messages, aggs)
-                t_plan = time.monotonic()
-
-                # Materialization strategy (keeps Spark jobs/superstep at 1-2
-                # and cached bytes at ~1 state copy):
-                # - state: the plan must be truncated every superstep —
-                #   without truncation each superstep's plan embeds the
-                #   previous state AND message plans (which embed the state
-                #   again), doubling plan size per superstep. This is the
-                #   reference's per-superstep status/value double-buffer
-                #   (FileGraphPartition.java:640-661). Two modes, MEASURED
-                #   head-to-head (PageRank sf0.1 x16, local[8]):
-                #   * "lazy" (default): single-job lazy localCheckpoint; the
-                #     step's statically-planned computation rides the
-                #     aggregate action. Steady 2.9 s/superstep.
-                #   * "aqe": persist -> aggregate action (step computation
-                #     runs UNDER adaptive execution into the cache) -> eager
-                #     localCheckpoint of the cache scan -> unpersist.
-                #     Hypothesis was static-planning waste; measurement says
-                #     otherwise — 6.4 s/superstep and degrading (the extra
-                #     cache+checkpoint double-store churns the block manager
-                #     and GC). AQE buys nothing here because the per-step
-                #     plans are two fixed key-partitioned shuffles with no
-                #     join-strategy or partition-count decisions worth
-                #     re-planning. Kept selectable (SPARK_GRAFT_STATE_MODE)
-                #     for re-measurement on other workload shapes.
-                # - messages: checkpointed ONLY when the halt rule needs their
-                #   count. Otherwise they stay lazy: consumed exactly once by
-                #   the next superstep's job (their plan roots at the
-                #   checkpointed state, so no lineage growth), and never cached
-                #   — halving per-superstep block-manager churn and GC.
-                exprs = [v.alias(k) for k, v in out.agg_exprs.items()]
-                exprs.append(F.count(F.lit(1)).alias("_state_rows"))
-                if self.state_mode == "aqe":
-                    cached = out.state.persist()
-                    _t = time.monotonic()
-                    row = cached.agg(*exprs).collect()[0]
-                    dur_action = time.monotonic() - _t
-                    _t = time.monotonic()
-                    new_state = cached.localCheckpoint(eager=True)
-                    dur_ckpt = time.monotonic() - _t
-                    cached.unpersist()
-                elif self.state_mode == "cache":
-                    # persist-only: the action executes the step INTO the
-                    # cache; no plan->RDD conversion ever happens. Later
-                    # supersteps plan against the cached analyzed plan
-                    # (CacheManager substitutes InMemoryRelation), so the
-                    # physical plan per step stays two shuffles + a cache
-                    # scan. prev-state unpersist below frees each cache one
-                    # step after it stops being an input.
-                    new_state = out.state.persist()
-                    dur_ckpt = 0.0
-                    _t = time.monotonic()
-                    row = new_state.agg(*exprs).collect()[0]
-                    dur_action = time.monotonic() - _t
-                else:
-                    steps_since_cut += 1
-                    if steps_since_cut >= self.truncate_every:
-                        _t = time.monotonic()
-                        # NOTE (round-6 A/B): converting this under
-                        # static_conversion (AQE off) at the session's
-                        # p=32 was measured WORSE (1.59 s vs 0.88 s/step,
-                        # sf0.1, local[32]) — 4 stages x 32 tiny-task
-                        # launches outweigh the saved Exchange. The
-                        # data-derived planner above resolves this: when
-                        # static_p is set, this same call converts
-                        # statically at the derived partition count
-                        # (0.55 s/step measured at p=4); otherwise it
-                        # converts under AQE exactly as before.
-                        new_state = out.state.localCheckpoint(eager=False)
-                        dur_ckpt = time.monotonic() - _t
-                        steps_since_cut = 0
-                    else:
-                        # in-window superstep: no lineage cut — the action
-                        # below plans and re-executes the (bounded) uncut
-                        # window; see truncate_every in __init__
-                        new_state = out.state
-                        dur_ckpt = 0.0
-                    _t = time.monotonic()
-                    row = new_state.agg(*exprs).collect()[0]
-                    dur_action = time.monotonic() - _t
-                t_mat = time.monotonic()
-                new_msgs = None
-                if out.make_messages is not None:
-                    new_msgs = out.make_messages(new_state)
-                    if program.needs_message_count:
-                        new_msgs = new_msgs.localCheckpoint(eager=False)
-
-                # one agg pass = the reference's per-worker partial aggregate
-                # + master merge (MasterAggrManager/WorkerAggrManager)
-                aggs = row.asDict()
-                if new_msgs is None:
-                    aggs[MSG_COUNT] = 0
-                elif program.needs_message_count:
-                    aggs[MSG_COUNT] = new_msgs.count()
-                else:
-                    aggs[MSG_COUNT] = None  # unknown, assumed non-empty
-                aggs[SUPERSTEP] = s
-
-                if prev_state is not None:
-                    prev_state.unpersist()
-                if prev_msgs is not None and program.needs_message_count:
-                    prev_msgs.unpersist()
-                prev_state, prev_msgs = state, messages
-                state, messages = new_state, new_msgs
-
-                t_end = time.monotonic()
-                step_metrics = {
-                    "superstep": s,
-                    "seconds": t_end - t0,
-                    "messages": aggs[MSG_COUNT],
-                    "state_rows": int(aggs["_state_rows"]),
-                    "aggregates": {
-                        k: aggs[k] for k in out.agg_exprs
-                    },
-                }
-                if profile:
-                    step_metrics["phase_seconds"] = {
-                        "plan": round(t_plan - t0, 4),
-                        "checkpoint": round(dur_ckpt, 4),
-                        "action": round(dur_action, 4),
-                        "messages": round(t_end - t_mat, 4),
-                    }
-                history.append(step_metrics)
-                if on_superstep is not None:
-                    on_superstep(step_metrics)
-
-                finished = self._finished(program, s, aggs)
+                # the state is cut every superstep; messages stay lazy:
+                # their plan roots at the cut state, and the next
+                # superstep's one action consumes them exactly once
+                state, row = loop.cut(out.state, **out.agg_exprs)
+                messages = (
+                    out.make_messages(state) if out.make_messages else None
+                )
+                aggs = dict(row.asDict(), **{SUPERSTEP: s})
+                loop.finish(self._converged(program, s, aggs, messages))
                 if self.checkpoint_dir and (
-                    finished or (s > 0 and s % self.checkpoint_every == 0)
+                    loop.halt_reason or (s > 0 and s % self.checkpoint_every == 0)
                 ):
                     self._write_checkpoint(program, s, state, messages, aggs)
 
-        finally:
-            _scope.__exit__(None, None, None)
-        total = time.monotonic() - t_run0
         metrics = {
             "algorithm": program.name,
             "supersteps": s + 1,
-            "seconds": total,
-            "supersteps_per_min": (s + 1) / total * 60.0 if total > 0 else None,
+            **loop.metrics,
         }
+        total = metrics["seconds"]
+        metrics["supersteps_per_min"] = (s + 1) / total * 60.0 if total > 0 else None
         return RunResult(
             state=program.finalize(state),
             supersteps=s + 1,
             aggs=aggs,
-            history=history,
+            history=loop.history,
             metrics=metrics,
         )
-
-    @staticmethod
-    def _finished(program: VertexProgram, s: int, aggs: dict) -> bool:
-        # mirrors MasterService.finishedIteration (MasterService.java:353-364)
-        if not program.master_continue(s, aggs):
-            return True
-        if s >= program.max_supersteps - 1:
-            return True
-        # vote-to-halt: our programs send messages iff the sending vertex
-        # stayed active, so "no messages" == "all inactive & silent"
-        return aggs.get(MSG_COUNT, 0) == 0

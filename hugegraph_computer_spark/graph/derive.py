@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hugegraph_computer_spark.engine.rounds import cut
+
 TURNS_PER_CONV = 16  # caps conversation length -> bounds graph diameter
 
 ROLE_BY_EVENT = {
@@ -230,19 +232,17 @@ class Graph:
             edges = edges.repartition(partitions, "src")
         nv = None
         if cache:
-            # lineage cut + materialize in ONE pass (round 6): a bare
-            # persist re-contributes the entire derivation subtree to
-            # EVERY downstream superstep's plan (the dumped PageRank
-            # step plan was 1532 lines; 166 after the cut). The lazy
-            # localCheckpoint converts under AQE (adaptive derivation
-            # execution) and the count materializes the checkpoint
-            # blocks directly — measured 2x cheaper at sf0.1 than the
-            # persist->count->checkpoint->unpersist pin, which stores
-            # the data twice. The count doubles as num_vertices.
-            nodes = nodes.localCheckpoint(eager=False)
-            nv = nodes.count()
-            edges = edges.localCheckpoint(eager=False)
-            ne = edges.count()
+            # lineage cut + materialize in ONE pass (engine/rounds.cut):
+            # a bare persist re-contributes the entire derivation
+            # subtree to EVERY downstream superstep's plan (the PageRank
+            # step plan was 1532 lines; 166 after the cut). The cut is
+            # measured 2x cheaper at sf0.1 than the AQE-safe `pin`,
+            # which stores the data twice. The counts double as
+            # num_vertices / num_edges.
+            nodes, r = cut(nodes)
+            nv = r["rows"]
+            edges, r = cut(edges)
+            ne = r["rows"]
         else:
             ne = None
         return cls(

@@ -14,7 +14,7 @@ Scale design: one window partitioned BY THE STRATUM (never a global
 sort). Spark's rank-limit pushdown inserts a WindowGroupLimit below
 the shuffle, so each map task keeps only its local top-n per stratum
 before anything moves — the shuffle carries O(n * strata), not the
-corpus (docs/PLANS.md shows the node). Strata are naturally bounded
+corpus (tests/test_linkgraph_extras.py asserts the node). Strata are naturally bounded
 (languages, domains); a single pathological stratum still costs only
 its own top-n heap per task.
 """

@@ -53,14 +53,14 @@ def random_walks(g, walk_len: int = 6, walks_per_node: int = 1) -> DataFrame:
     """walks_per_node walks per vertex: returns (start, walk, step, node)
     rows, step 0 = the start vertex itself; `walk` is the per-start walk
     index, salted into the hash so walks diverge deterministically."""
-    from hugegraph_computer_spark.engine.pin import cut_counted
+    from hugegraph_computer_spark.engine.rounds import cut
 
     # renamed columns: the frontier re-joins this table every step, so
     # unprefixed names would be ambiguous self-join references. Pinned
     # once (round 6): the walk loop references it walk_len-1 times, and
     # without the pin each step's plan re-embeds (and trusts exchange
     # reuse to dedupe) the distinct+window subtree.
-    eidx, _ = cut_counted(
+    eidx, _ = cut(
         indexed_edges(g.edges).select(
             F.col("src").alias("e_src"),
             F.col("dst").alias("e_dst"),

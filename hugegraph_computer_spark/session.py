@@ -15,6 +15,31 @@ import os
 
 from pyspark.sql import SparkSession
 
+# share of the host's memory the driver heap takes when
+# SPARK_DRIVER_MEMORY is unset (local mode: the driver JVM IS the
+# executor, and Python workers plus page cache need the rest)
+HEAP_SHARE = 0.4
+
+
+def default_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str | None:
+    """SPARK_DRIVER_MEMORY, else HEAP_SHARE of MemTotal as "<n>m"; None
+    (Spark's own default) when meminfo cannot be read."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    try:
+        with open(meminfo) as f:
+            total_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return None
+    return f"{int(total_kb * HEAP_SHARE) // 1024}m"
+
 
 def get_spark(
     app_name: str = "hugegraph-computer-spark",
@@ -22,7 +47,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     if shuffle_partitions is None:
         # local[N] -> N; local[*] / cluster -> default 32
@@ -48,14 +73,15 @@ def get_spark(
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # local mode: the driver JVM IS the executor — size it for the
-        # box (32 concurrent tasks x SHJ build maps at large expansions
-        # OOM an 8g heap; the sandbox has 128 GiB). On a real cluster
-        # executor memory is the operative knob instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    # local mode: the driver JVM IS the executor, so its heap is sized
+    # to the host (a fixed 48g got the JVM OOM-killed on a 15 GiB host).
+    # On a real cluster executor memory is the operative knob instead.
+    heap = default_driver_memory()
+    if heap:
+        builder = builder.config("spark.driver.memory", heap)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -111,72 +111,6 @@ def test_salted_aggregate_matches_plain(sf_graph):
     assert all(abs(plain[k] - salted[k]) < 1e-9 for k in plain)
 
 
-def test_runner_rejects_unknown_state_mode():
-    """A typo'd SPARK_GRAFT_STATE_MODE must error, not silently fall
-    back to 'lazy' (a benchmark would mis-attribute its measurement)."""
-    import pytest
-
-    from hugegraph_computer_spark.engine.superstep import PregelRunner
-
-    with pytest.raises(ValueError, match="state_mode"):
-        PregelRunner(state_mode="age")
-
-
-def test_runner_rejects_bad_truncate_every():
-    import pytest
-
-    from hugegraph_computer_spark.engine.superstep import PregelRunner
-
-    with pytest.raises(ValueError, match="truncate_every"):
-        PregelRunner(truncate_every=0)
-
-
-def test_truncate_every_parity_and_resume(sf_graph):
-    """truncate_every=K (the round-4 floor knob: cut lineage every K
-    supersteps instead of every superstep) must not change results —
-    per-step aggregates, final state, and checkpoint/resume all stay
-    exact even when checkpoints land on UNCUT supersteps."""
-    base = PregelRunner().run(PageRank(l1_tol=0.0, max_supersteps=5), sf_graph)
-    a = {x["id"]: x["rank"] for x in base.state.collect()}
-    ckdir = tempfile.mkdtemp(prefix="hcs_test_trunc_")
-    try:
-        k3 = PregelRunner(
-            checkpoint_dir=ckdir, checkpoint_every=3, truncate_every=3
-        ).run(PageRank(l1_tol=0.0, max_supersteps=5), sf_graph)
-        b = {x["id"]: x["rank"] for x in k3.state.collect()}
-        assert max(abs(a[i] - b[i]) for i in a) < 1e-12
-        # per-step aggregate parity (the halt rule's inputs)
-        for ha, hb in zip(base.history, k3.history):
-            assert abs(
-                ha["aggregates"]["l1_diff"] - hb["aggregates"]["l1_diff"]
-            ) < 1e-12
-        # resume from a checkpoint written mid-window (superstep 3 is an
-        # uncut step under K=3: the only cut lands on superstep 2)
-        ckpts = sorted(os.listdir(os.path.join(ckdir, "page_rank")))
-        mid = os.path.join(ckdir, "page_rank", ckpts[0])
-        resumed = PregelRunner(truncate_every=3).run(
-            PageRank(l1_tol=0.0, max_supersteps=5), sf_graph, resume_from=mid
-        )
-        c = {x["id"]: x["rank"] for x in resumed.state.collect()}
-        assert max(abs(a[i] - c[i]) for i in a) < 1e-12
-    finally:
-        shutil.rmtree(ckdir, ignore_errors=True)
-
-
-def test_cache_state_mode_parity(sf_graph):
-    """state_mode='cache' (persist-only, no lineage cut) is a measured
-    NEGATIVE for perf (BENCH/truncate_ab.md: per-step planning walks
-    the exponentially-nested analyzed plan once prior caches are
-    dropped) but must stay CORRECT while selectable."""
-    base = PregelRunner().run(PageRank(l1_tol=0.0, max_supersteps=4), sf_graph)
-    cached = PregelRunner(state_mode="cache").run(
-        PageRank(l1_tol=0.0, max_supersteps=4), sf_graph
-    )
-    a = {x["id"]: x["rank"] for x in base.state.collect()}
-    b = {x["id"]: x["rank"] for x in cached.state.collect()}
-    assert max(abs(a[i] - b[i]) for i in a) < 1e-12
-
-
 def test_should_stop_aborts_before_first_superstep(sf_graph):
     """should_stop=True from the start -> RunAborted with no superstep
     executed (the driver's zero-superstep cancel contract)."""

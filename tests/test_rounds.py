@@ -1,0 +1,101 @@
+"""The one round loop (engine/rounds.py): every halt rule ends on empty
+and edgeless graphs, and every loop reports the same per-round records
+and halt metrics."""
+
+from __future__ import annotations
+
+import pytest
+
+from hugegraph_computer_spark.algorithms import Lpa, PageRank, Wcc, connected_components
+from hugegraph_computer_spark.algorithms.hits import hits
+from hugegraph_computer_spark.algorithms.kcore import KCore
+from hugegraph_computer_spark.algorithms.ppr import PersonalPageRank
+from hugegraph_computer_spark.algorithms.sssp import Sssp
+from hugegraph_computer_spark.engine import PregelRunner
+from hugegraph_computer_spark.graph import Graph
+from hugegraph_computer_spark.oracles import py_reference as oracle
+
+NODES = ["a", "b", "c"]
+PHASES = {"plan", "checkpoint", "action", "messages"}
+
+
+@pytest.fixture(scope="module", params=["empty", "edgeless"])
+def bare(request, spark, sf_graph):
+    nodes = [] if request.param == "empty" else NODES
+    g = Graph(
+        vertices=spark.createDataFrame([(v,) for v in nodes], sf_graph.vertices.schema),
+        edges=spark.createDataFrame([], sf_graph.edges.schema),
+        partitions=2,
+    )
+    return request.param, nodes, g
+
+
+def _pregel(program):
+    def run(g):
+        res = PregelRunner().run(program(), g)
+        return res.history, res.metrics, res.state
+
+    return run
+
+
+def _cc(g):
+    res = connected_components(g)
+    return res.history, res.metrics, res.labels
+
+
+# name -> (run on a graph, result column, oracle over (nodes, edges))
+LOOPS = {
+    "pagerank": (_pregel(PageRank), "rank", lambda n, e: oracle.pagerank(n, e)[0]),
+    "ppr": (
+        _pregel(lambda: PersonalPageRank(source="a")),
+        "rank",
+        lambda n, e: oracle.ppr(n, e, "a"),
+    ),
+    "sssp": (
+        _pregel(lambda: Sssp(sources=["a"])),
+        "dist",
+        lambda n, e: oracle.sssp(n, e, "a"),
+    ),
+    "kcore": (_pregel(KCore), "core", oracle.kcore),
+    "lpa": (_pregel(Lpa), "label", oracle.lpa),
+    "wcc": (_pregel(Wcc), "comp", oracle.wcc),
+    "cc_fast": (_cc, "comp", oracle.wcc),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LOOPS))
+def test_halts_converged_on_bare_graphs(bare, name):
+    kind, nodes, g = bare
+    run, key, want = LOOPS[name]
+    history, metrics, state = run(g)
+    assert metrics["halt_reason"] == "converged"
+    # the empty state halts after its first round; edgeless graphs
+    # converge on their own halt rule within a few supersteps
+    assert len(history) == 1 if kind == "empty" else len(history) <= 3
+    _assert_records(history, metrics)
+    got = {r["id"]: r[key] for r in state.collect()}
+    expected = want(nodes, []) if nodes else {}
+    assert got.keys() == set(expected)
+    assert all(got[v] == pytest.approx(expected[v], abs=1e-12) for v in expected)
+
+
+def test_hits_runs_its_fixed_rounds_on_bare_graphs(bare):
+    """HITS has no convergence rule: it stops at its round count, except
+    on the empty graph, whose empty state halts the loop at once."""
+    kind, nodes, g = bare
+    res = hits(g, supersteps=10)
+    _assert_records(res.history, res.metrics)
+    if kind == "empty":
+        assert (res.metrics["halt_reason"], res.supersteps) == ("converged", 1)
+    else:
+        assert (res.metrics["halt_reason"], res.supersteps) == ("max_rounds", 10)
+    scores = {r["id"]: (r["auth"], r["hub"]) for r in res.state.collect()}
+    assert scores == {v: (0.0, 0.0) for v in nodes}
+
+
+def _assert_records(history, metrics):
+    assert {"halt_reason", "planner"} <= metrics.keys()
+    for i, h in enumerate(history):
+        assert h["superstep"] == i
+        assert h["seconds"] >= 0
+        assert set(h["phase_seconds"]) == PHASES
