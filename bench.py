@@ -122,8 +122,8 @@ def _multi_leg(n_legs: int) -> None:
 
 def main() -> None:
     # Multi-leg wrapper: the full suite defaults to 3 fresh-JVM legs
-    # with per-query minima; pagerank-only legs (densify_ab /
-    # scaling_report do their own repeats) stay single unless asked.
+    # with per-query minima; pagerank-only legs (scaling_report does
+    # its own repeats) stay single unless asked.
     in_leg = bool(os.environ.get("SPARK_GRAFT_BENCH_LEG"))
     default_legs = "1" if (in_leg or os.environ.get("SPARK_GRAFT_ONLY")) else "3"
     n_legs = int(os.environ.get("SPARK_GRAFT_LEGS", default_legs))
@@ -187,9 +187,9 @@ def main() -> None:
     # persisted graph in the same JVM contaminates every later query
     # (round-2 lesson: WCC +65%, LPA +42% from the leaked dense
     # vertices/edges/mapping caches) and the warm-JVM ordering makes the
-    # comparison itself invalid. The A/B runs as two FRESH-JVM legs via
-    # tools/densify_ab.py (SPARK_GRAFT_ONLY=pagerank x
-    # SPARK_GRAFT_DENSIFY={0,1}); results in BENCH/densify_ab.json.
+    # comparison itself invalid. The A/B ran as two FRESH-JVM legs
+    # (SPARK_GRAFT_ONLY=pagerank x SPARK_GRAFT_DENSIFY={0,1}); results
+    # in BENCH/densify_ab.json.
 
     if os.environ.get("SPARK_GRAFT_ONLY") == "pagerank":
         total = sum(timings.values())

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hugegraph_computer_spark.engine.rounds import RoundLoop
+
 
 def source_sample_predicate(col: Column, sample_rate: float) -> Column:
     """Deterministic source sampling: keep ids whose portable md5-long
@@ -55,61 +57,64 @@ def betweenness_centrality(g, max_rounds: int = 32) -> DataFrame:
     # (src,dst,etype) but families can overlap (uses/copart) -> distinct
     # matches "neighbors", and the pytest oracle uses the same view.
 
-    # superstep 0: seq=[self] to all out-targets
+    # round 0 cuts the seed frontier seq=[self] to all out-targets; each
+    # later round accepts, votes and cuts the next frontier, and an
+    # empty frontier halts the loop. The accumulators are lazy cuts,
+    # stored by the frontier cut's action that first reads them.
+    spark = g.vertices.sparkSession
     frontier = e.select(
         F.col("e_dst").alias("dst"), F.array(F.col("e_src")).alias("seq")
-    ).localCheckpoint(eager=True)
-
-    spark = g.vertices.sparkSession
+    )
     arrived = g.vertices.select(
         F.col("id").alias("v"), F.col("id").alias("source")
-    ).localCheckpoint(eager=True)  # self counts as arrived (compute0)
+    ).localCheckpoint(eager=False)  # self counts as arrived (compute0)
     votes_acc = spark.createDataFrame([], "id string, vote double")
 
-    rounds = 0
-    while rounds < max_rounds and not frontier.isEmpty():
-        rounds += 1
-        msg = frontier.select("dst", "seq", F.col("seq")[0].alias("source"))
-        accepted = msg.join(
-            arrived,
-            (msg["dst"] == arrived["v"]) & (msg["source"] == arrived["source"]),
-            "left_anti",
-        ).localCheckpoint(eager=True)
+    with RoundLoop("betweenness", spark, max_rounds=max_rounds + 1) as loop:
+        for i in loop:
+            if i > 0:
+                msg = frontier.select("dst", "seq", F.col("seq")[0].alias("source"))
+                accepted = msg.join(
+                    arrived,
+                    (msg["dst"] == arrived["v"]) & (msg["source"] == arrived["source"]),
+                    "left_anti",
+                ).localCheckpoint(eager=False)
 
-        # votes: per (dst, source): total accepted; per intermediate:
-        # occurrences; vote = count/total to each intermediate
-        totals = accepted.groupBy("dst", "source").agg(
-            F.count(F.lit(1)).alias("total")
-        )
-        inter = (
-            accepted.select(
-                "dst",
-                "source",
-                F.explode(F.slice("seq", 2, 1_000_000)).alias("mid"),
-            )
-            .groupBy("dst", "source", "mid")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        votes = inter.join(totals, ["dst", "source"]).select(
-            F.col("mid").alias("id"),
-            (F.col("cnt").cast("double") / F.col("total")).alias("vote"),
-        )
-        votes_acc = votes_acc.unionByName(votes).localCheckpoint(eager=True)
+                # votes: per (dst, source): total accepted; per
+                # intermediate: occurrences; vote = count/total to each
+                # intermediate
+                totals = accepted.groupBy("dst", "source").agg(
+                    F.count(F.lit(1)).alias("total")
+                )
+                inter = (
+                    accepted.select(
+                        "dst",
+                        "source",
+                        F.explode(F.slice("seq", 2, 1_000_000)).alias("mid"),
+                    )
+                    .groupBy("dst", "source", "mid")
+                    .agg(F.count(F.lit(1)).alias("cnt"))
+                )
+                votes = inter.join(totals, ["dst", "source"]).select(
+                    F.col("mid").alias("id"),
+                    (F.col("cnt").cast("double") / F.col("total")).alias("vote"),
+                )
+                votes_acc = votes_acc.unionByName(votes).localCheckpoint(eager=False)
+                arrived = arrived.unionByName(
+                    accepted.select(F.col("dst").alias("v"), "source").distinct()
+                ).localCheckpoint(eager=False)
 
-        arrived = arrived.unionByName(
-            accepted.select(F.col("dst").alias("v"), "source").distinct()
-        ).localCheckpoint(eager=True)
-
-        # forward: seq+[dst] to out-targets not already on the path
-        ext = accepted.select(
-            "dst", F.concat("seq", F.array(F.col("dst"))).alias("seq")
-        )
-        frontier = (
-            ext.join(e, ext["dst"] == e["e_src"])
-            .where(~F.array_contains(F.col("seq"), F.col("e_dst")))
-            .select(F.col("e_dst").alias("dst"), "seq")
-            .localCheckpoint(eager=True)
-        )
+                # forward: seq+[dst] to out-targets not already on the path
+                ext = accepted.select(
+                    "dst", F.concat("seq", F.array(F.col("dst"))).alias("seq")
+                )
+                frontier = (
+                    ext.join(e, ext["dst"] == e["e_src"])
+                    .where(~F.array_contains(F.col("seq"), F.col("e_dst")))
+                    .select(F.col("e_dst").alias("dst"), "seq")
+                )
+            frontier, _ = loop.cut(frontier)
+            loop.finish()
 
     bw = votes_acc.groupBy("id").agg(F.sum("vote").alias("betweenness"))
     return g.vertices.join(bw, "id", "left").select(
@@ -131,53 +136,52 @@ def betweenness_brandes(g, max_rounds: int = 32) -> DataFrame:
     the shared SQL oracle). This is the formulation to run at 10^12-turn
     scale (for the sampled-source estimator, which BFS-restricts the
     frontier too, see betweenness_brandes_sampled)."""
-    from hugegraph_computer_spark.engine.rounds import cut
-
+    spark = g.vertices.sparkSession
     e = g.edges.select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
     ).distinct().persist()
 
-    # each frame is a lazy lineage cut whose materializing count doubles
-    # as the emptiness check (one action per frame per round)
-    # hop-level BFS with path counts; `reach` accumulates finalized rows
-    frontier, r = cut(
-        e.where(F.col("e_src") != F.col("e_dst")).select(
-            F.col("e_src").alias("s"),
-            F.col("e_dst").alias("v"),
-            F.lit(1).alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
+    # hop-level BFS with path counts: round 0 cuts the seed frontier,
+    # each later round cuts the next level, and an empty level halts
+    # the loop. `reach` accumulates the cut levels as a lazy cut,
+    # stored by the next round's frontier action (via `seen`) or, for
+    # the last round, by the final triple join.
+    frontier = e.where(F.col("e_src") != F.col("e_dst")).select(
+        F.col("e_src").alias("s"),
+        F.col("e_dst").alias("v"),
+        F.lit(1).alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
     )
-    n = r["rows"]
-    reach = frontier
-    rounds = 1
-    while rounds < max_rounds and n > 0:
-        rounds += 1
-        nxt = (
-            frontier.join(e, frontier["v"] == e["e_src"])
-            .where(F.col("e_dst") != F.col("s"))
-            .groupBy("s", F.col("e_dst").alias("v2"))
-            .agg(F.sum("sigma").alias("sigma"), F.max("dist").alias("d"))
-        )
-        seen = reach.select("s", F.col("v").alias("v2")).withColumn(
-            "_seen", F.lit(True)
-        )
-        frontier, r = cut(
-            nxt.join(seen, ["s", "v2"], "left")
-            .where(F.col("_seen").isNull())
-            .select(
-                "s",
-                F.col("v2").alias("v"),
-                (F.col("d") + 1).alias("dist"),
-                "sigma",
+    reach = None
+    with RoundLoop("betweenness_brandes", spark, max_rounds=max_rounds) as loop:
+        for i in loop:
+            if i > 0:
+                nxt = (
+                    frontier.join(e, frontier["v"] == e["e_src"])
+                    .where(F.col("e_dst") != F.col("s"))
+                    .groupBy("s", F.col("e_dst").alias("v2"))
+                    .agg(F.sum("sigma").alias("sigma"), F.max("dist").alias("d"))
+                )
+                seen = reach.select("s", F.col("v").alias("v2")).withColumn(
+                    "_seen", F.lit(True)
+                )
+                frontier = (
+                    nxt.join(seen, ["s", "v2"], "left")
+                    .where(F.col("_seen").isNull())
+                    .select(
+                        "s",
+                        F.col("v2").alias("v"),
+                        (F.col("d") + 1).alias("dist"),
+                        "sigma",
+                    )
+                )
+            frontier, _ = loop.cut(frontier)
+            loop.finish()
+            reach = (
+                frontier
+                if reach is None
+                else reach.unionByName(frontier).localCheckpoint(eager=False)
             )
-        )
-        n = r["rows"]
-        if n == 0:
-            break
-        # lazy cut: materialized inside the next round's frontier count
-        # (via `seen`) or, for the last round, by the final triple join
-        reach = reach.unionByName(frontier).localCheckpoint(eager=False)
 
     sv = reach.select(
         F.col("s").alias("sv_s"), F.col("v").alias("mid"),
@@ -227,14 +231,14 @@ def betweenness_brandes_sampled(
     pairs — so sample_rate=1.0 reproduces betweenness_brandes values
     EXACTLY (pytest-asserted), and any rate matches the SQL oracle's
     source-filtered triple join."""
-    from hugegraph_computer_spark.engine.rounds import cut
-
+    spark = g.vertices.sparkSession
     e = g.edges.select(
         F.col("src").alias("e_src"), F.col("dst").alias("e_dst")
     ).distinct().persist()
 
-    # lazy cuts + count-as-emptiness-check, as in betweenness_brandes
-    frontier, r = cut(
+    # the forward rounds run as in betweenness_brandes, from sampled
+    # sources only; `seen` is the lazily cut union of the levels
+    frontier = (
         e.where(F.col("e_src") != F.col("e_dst"))
         .where(source_sample_predicate(F.col("e_src"), sample_rate))
         .select(
@@ -243,37 +247,39 @@ def betweenness_brandes_sampled(
             F.lit(1).cast("long").alias("sigma"),
         )
     )
-    n = r["rows"]
-    levels: list[DataFrame] = [frontier]  # levels[d-1] = frontier at dist d
-    seen = frontier.select("s", "v").localCheckpoint(eager=False)
-    while len(levels) < max_rounds and n > 0:
-        nxt = (
-            frontier.join(e, frontier["v"] == e["e_src"])
-            .where(F.col("e_dst") != F.col("s"))
-            .groupBy("s", F.col("e_dst").alias("v2"))
-            .agg(F.sum("sigma").alias("sigma"))
-        )
-        nxt, r = cut(
-            nxt.join(
-                seen.withColumnRenamed("v", "v2").withColumn("_seen", F.lit(True)),
-                ["s", "v2"],
-                "left",
-            )
-            .where(F.col("_seen").isNull())
-            .select("s", F.col("v2").alias("v"), "sigma")
-        )
-        n = r["rows"]
-        if n == 0:
-            break
-        frontier = nxt
-        levels.append(frontier)
-        seen = seen.unionByName(frontier.select("s", "v")).localCheckpoint(
-            eager=False
-        )
+    levels: list[DataFrame] = []  # levels[d-1] = frontier at dist d
+    seen = None
+    with RoundLoop("betweenness_sampled", spark, max_rounds=max_rounds) as loop:
+        for i in loop:
+            if i > 0:
+                nxt = (
+                    frontier.join(e, frontier["v"] == e["e_src"])
+                    .where(F.col("e_dst") != F.col("s"))
+                    .groupBy("s", F.col("e_dst").alias("v2"))
+                    .agg(F.sum("sigma").alias("sigma"))
+                )
+                frontier = (
+                    nxt.join(
+                        seen.withColumnRenamed("v", "v2").withColumn(
+                            "_seen", F.lit(True)
+                        ),
+                        ["s", "v2"],
+                        "left",
+                    )
+                    .where(F.col("_seen").isNull())
+                    .select("s", F.col("v2").alias("v"), "sigma")
+                )
+            frontier, row = loop.cut(frontier)
+            loop.finish()
+            if i == 0 or row["rows"]:  # an empty deepest level adds nothing
+                levels.append(frontier)
+                pairs = frontier.select("s", "v")
+                if seen is not None:
+                    pairs = seen.unionByName(pairs)
+                seen = pairs.localCheckpoint(eager=False)
 
     # backward sweep: delta at the deepest level is 0; each level down
     # gathers sigma_v/sigma_w * (1 + delta_w) from successors at d+1
-    spark = g.vertices.sparkSession
     acc = None  # union of (v, delta) contributions across levels
     delta = levels[-1].select(
         "s", "v", "sigma", F.lit(0.0).alias("delta")

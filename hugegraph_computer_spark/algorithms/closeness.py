@@ -18,15 +18,17 @@ State here is the exploded form of the reference's MapValue: one row
 per (vertex, start) pair instead of a map column — Spark-first (joins/
 aggregations instead of per-row map mutation), spill-safe, and the
 pair count is bounded by reachability, not V^2, on sparse DAG-ish
-graphs. The driver loop is a standalone fixpoint (vote-to-halt ==
-frontier empties), not the vertex-state runner, because state is
-per-PAIR.
+graphs. The fixpoint runs on the engine's RoundLoop (vote-to-halt ==
+frontier empties), not through the vertex-state runner, because state
+is per-PAIR.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hugegraph_computer_spark.engine.rounds import RoundLoop
 
 
 def closeness_centrality(
@@ -52,7 +54,9 @@ def closeness_centrality(
         F.coalesce(F.col("weight"), F.lit(1.0)).alias("w"),
     )
 
-    # superstep 0: (start=self, dist=w) to every out-target
+    # round 0 cuts the seed frontier (start=self, dist=w) to every
+    # out-target; each later round forwards improvements and cuts the
+    # next frontier, and an empty frontier halts the loop (vote-to-halt)
     frontier = e.select(
         F.col("e_dst").alias("id"),
         F.col("e_src").alias("start"),
@@ -62,50 +66,41 @@ def closeness_centrality(
         frontier = frontier.where(
             source_sample_predicate(F.col("start"), sample_rate)
         )
-    from hugegraph_computer_spark.engine.rounds import cut
-
-    # lazy lineage cuts whose materializing count doubles as the
-    # emptiness check (one action per frame per round)
-    frontier, r = cut(
-        frontier.groupBy("id", "start").agg(F.min("dist").alias("dist"))
-    )
-    n_frontier = r["rows"]
-
-    dists = frontier  # accumulated per-(vertex,start) minima
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        if n_frontier == 0:
-            break
-        # forward improvements: dist + w to out-targets (skip start/self)
-        fwd = (
-            frontier.join(e, frontier["id"] == e["e_src"])
-            .select(
-                F.col("e_dst").alias("id"),
-                "start",
-                (F.col("dist") + F.col("w")).alias("dist"),
-            )
-            .where((F.col("id") != F.col("start")))
-        )
-        cand = fwd.groupBy("id", "start").agg(F.min("dist").alias("dist"))
-        # keep only true improvements vs accumulated state
-        old = dists.select("id", "start", F.col("dist").alias("old"))
-        improved, r = cut(
-            cand.join(old, ["id", "start"], "left")
-            .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("id", "start", "dist")
-        )
-        n_frontier = r["rows"]
-        if n_frontier == 0:
-            break
-        # lazy cut: materialized by the next round's improvement join
-        # (or the final centrality aggregation), then read as stored
-        dists = (
-            dists.unionByName(improved)
-            .groupBy("id", "start")
-            .agg(F.min("dist").alias("dist"))
-        ).localCheckpoint(eager=False)
-        frontier = improved
+    frontier = frontier.groupBy("id", "start").agg(F.min("dist").alias("dist"))
+    spark = g.vertices.sparkSession
+    with RoundLoop("closeness", spark, max_rounds=max_rounds + 1) as loop:
+        for i in loop:
+            if i > 0:
+                # forward improvements: dist + w to out-targets (skip
+                # start/self), kept only where they beat the state
+                fwd = (
+                    frontier.join(e, frontier["id"] == e["e_src"])
+                    .select(
+                        F.col("e_dst").alias("id"),
+                        "start",
+                        (F.col("dist") + F.col("w")).alias("dist"),
+                    )
+                    .where((F.col("id") != F.col("start")))
+                )
+                cand = fwd.groupBy("id", "start").agg(F.min("dist").alias("dist"))
+                old = dists.select("id", "start", F.col("dist").alias("old"))
+                frontier = (
+                    cand.join(old, ["id", "start"], "left")
+                    .where(F.col("old").isNull() | (F.col("dist") < F.col("old")))
+                    .select("id", "start", "dist")
+                )
+            frontier, row = loop.cut(frontier)
+            loop.finish()
+            if i == 0:
+                dists = frontier  # accumulated per-(vertex,start) minima
+            elif row["rows"]:  # an empty frontier improves nothing
+                # lazy cut: materialized by the next round's improvement
+                # join (or the final centrality aggregation)
+                dists = (
+                    dists.unionByName(frontier)
+                    .groupBy("id", "start")
+                    .agg(F.min("dist").alias("dist"))
+                ).localCheckpoint(eager=False)
 
     cent = dists.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_reachable"),

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hugegraph_computer_spark.engine.rounds import RoundLoop
+
 
 def links(
     g,
@@ -51,11 +53,10 @@ def links(
         (end_edge if end_edge is not None else F.lit(False)).alias("e_end"),
     )
 
+    # lazy cut: stored by round 0's action, then read by every round
     verts = g.vertices.select(
         "id", start.alias("is_start"), end.alias("is_end")
-    ).localCheckpoint(eager=True)
-
-    results = spark.createDataFrame([], "id string, path array<string>")
+    ).localCheckpoint(eager=False)
 
     def _step_path(path_col):
         """Path extension for one traversed edge: optional edge marker,
@@ -81,41 +82,32 @@ def links(
         )
         return ended, nxt
 
-    # compute0: start vertices that are themselves end record [self]
+    # compute0: start vertices that are themselves end record [self];
+    # the others spread path=[self] along passing edges
     starts = verts.where("is_start")
-    self_end = starts.where("is_end").select(
-        "id", F.array(F.col("id")).alias("path")
+    results = spark.createDataFrame([], "id string, path array<string>").unionByName(
+        starts.where("is_end").select("id", F.array(F.col("id")).alias("path"))
     )
-    results = results.unionByName(self_end)
-
-    # spreading starts: path=[self] along passing edges
-    edge_ended, frontier = _spread(
-        starts.where(~F.col("is_end")).select(
-            "id", F.array(F.col("id")).alias("path")
-        )
-    )
-    if end_edge is not None:
-        results = results.unionByName(edge_ended)
-    frontier = frontier.localCheckpoint(eager=True)
-
-    rounds = 0
-    while rounds < max_rounds and not frontier.isEmpty():
-        rounds += 1
-        cur = frontier.join(verts, frontier["dst"] == verts["id"]).select(
-            "id", "path", "is_end"
-        )
-        ended = cur.where("is_end").select(
-            "id", F.concat("path", F.array(F.col("id"))).alias("path")
-        )
-        results = results.unionByName(ended).localCheckpoint(eager=True)
-
-        cont = cur.where(~F.col("is_end")).select(
-            "id", F.concat("path", F.array(F.col("id"))).alias("path")
-        )
-        edge_ended, frontier = _spread(cont)
-        if end_edge is not None:
-            results = results.unionByName(edge_ended).localCheckpoint(eager=True)
-        frontier = frontier.localCheckpoint(eager=True)
+    at = starts.where(~F.col("is_end")).select("id", F.array(F.col("id")).alias("path"))
+    # round 0 cuts the seed frontier, each later round walks it one hop
+    # and cuts the next one; an empty frontier halts the loop, and
+    # max_rounds bounds the walk like bsp.max_super_step
+    with RoundLoop("links", spark, max_rounds=max_rounds + 1) as loop:
+        for i in loop:
+            if i > 0:
+                cur = frontier.join(verts, frontier["dst"] == verts["id"]).select(
+                    "id", F.concat("path", F.array(F.col("id"))).alias("path"), "is_end"
+                )
+                results = results.unionByName(
+                    cur.where("is_end").select("id", "path")
+                )
+                at = cur.where(~F.col("is_end")).select("id", "path")
+            edge_ended, frontier = _spread(at)
+            if end_edge is not None:
+                results = results.unionByName(edge_ended)
+            results = results.localCheckpoint(eager=False)
+            frontier, _ = loop.cut(frontier)
+            loop.finish()
     return results
 
 

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hugegraph_computer_spark.engine.rounds import RoundLoop
+
 
 def rings_detection(g, max_len: int = 10, edge_filter=None) -> DataFrame:
     """Returns (start, ring: array<string>) — every directed cycle whose
@@ -43,38 +45,39 @@ def rings_detection(g, max_len: int = 10, edge_filter=None) -> DataFrame:
     edges = g.edges if edge_filter is None else g.edges.where(edge_filter)
     e = edges.select(F.col("src").alias("e_src"), F.col("dst").alias("e_dst"))
 
-    # superstep 0: path=[src] to targets >= src (RingsDetection.java:60-66)
-    frontier = (
-        e.where(F.col("e_src") <= F.col("e_dst"))
-        .select(F.col("e_dst").alias("dst"), F.array(F.col("e_src")).alias("path"))
-        .localCheckpoint(eager=True)
+    # round 0 cuts the seed frontier path=[src] to targets >= src
+    # (RingsDetection.java:60-66); each later round closes rings and
+    # cuts the next frontier. An empty frontier halts the loop
+    # (vote-to-halt); max_len caps the rings' hop count.
+    frontier = e.where(F.col("e_src") <= F.col("e_dst")).select(
+        F.col("e_dst").alias("dst"), F.array(F.col("e_src")).alias("path")
     )
-    rings_schema = "start string, ring array<string>"
-    rings = spark.createDataFrame([], rings_schema)
-
-    hops = 1
-    while hops < max_len and not frontier.isEmpty():
-        hops += 1
-        closed = frontier.where(
-            (F.col("dst") == F.col("path")[0])
-            & (F.col("dst") == F.array_min("path"))
-        ).select(
-            F.col("dst").alias("start"),
-            F.concat(F.col("path"), F.array(F.col("dst"))).alias("ring"),
-        )
-        rings = rings.unionByName(closed).localCheckpoint(eager=True)
-
-        extend = frontier.where(
-            (F.col("dst") != F.col("path")[0])
-            & ~F.array_contains("path", F.col("dst"))
-        ).select("dst", F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"))
-        frontier = (
-            extend.join(e, extend["dst"] == e["e_src"])
-            # forward only to targets >= ringId == path[0] (:108-110)
-            .where(F.col("path")[0] <= F.col("e_dst"))
-            .select(F.col("e_dst").alias("dst"), "path")
-            .localCheckpoint(eager=True)
-        )
+    rings = spark.createDataFrame([], "start string, ring array<string>")
+    with RoundLoop("rings", spark, max_rounds=max_len) as loop:
+        for hop in loop:
+            if hop > 0:
+                closed = frontier.where(
+                    (F.col("dst") == F.col("path")[0])
+                    & (F.col("dst") == F.array_min("path"))
+                ).select(
+                    F.col("dst").alias("start"),
+                    F.concat(F.col("path"), F.array(F.col("dst"))).alias("ring"),
+                )
+                rings = rings.unionByName(closed).localCheckpoint(eager=False)
+                extend = frontier.where(
+                    (F.col("dst") != F.col("path")[0])
+                    & ~F.array_contains("path", F.col("dst"))
+                ).select(
+                    "dst", F.concat(F.col("path"), F.array(F.col("dst"))).alias("path")
+                )
+                frontier = (
+                    extend.join(e, extend["dst"] == e["e_src"])
+                    # forward only to targets >= ringId == path[0] (:108-110)
+                    .where(F.col("path")[0] <= F.col("e_dst"))
+                    .select(F.col("e_dst").alias("dst"), "path")
+                )
+            frontier, _ = loop.cut(frontier)
+            loop.finish()
     return rings
 
 

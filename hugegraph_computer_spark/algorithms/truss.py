@@ -25,9 +25,9 @@ the same orientation the gated `triangle_count` uses. Support must be
 recomputed INSIDE the shrinking subgraph, so the degree agg + wedge
 join re-run per peel round. Per round: one V-sized degree agg, one
 self-join shuffle, one membership semi-join + one support aggregation,
-all JVM-side; the round result is lineage-cut lazily and the
-materializing count doubles as the convergence check (engine/rounds
-cut — one action, one store per round). Removal cascades terminate in a handful of rounds in
+all JVM-side; each peel is one RoundLoop round, whose lazy lineage
+cut's materializing count doubles as the convergence check (one action,
+one store per round). Removal cascades terminate in a handful of rounds in
 practice (peeling only re-examines survivors); `max_rounds` bounds the
 loop defensively and WARNS when exhausted before the fixpoint.
 
@@ -45,7 +45,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.engine.rounds import cut
+from hugegraph_computer_spark.engine.rounds import RoundLoop, cut
 
 
 @dataclass
@@ -115,30 +115,29 @@ def ktruss(graph, k: int = 4, max_rounds: int = 30) -> TrussResult:
         .select(F.col("src").alias("u"), F.col("dst").alias("v"))
     )
     n_edges = r["rows"]
-    rounds = 0
-    survivors = edges.withColumn("support", F.lit(0).cast("long")).limit(0)
-    while rounds < max_rounds:
-        rounds += 1
-        # edges with zero triangles fall out of the aggregation and are
-        # thereby dropped — correct for every k >= 3 (0 < k-2); the
-        # the cut's materializing count doubles as the convergence check
-        survivors, r = cut(_wedge_support(edges).where(F.col("support") >= k - 2))
-        n_new = r["rows"]
-        if n_new == n_edges:  # survivors ⊆ edges, so equal count = fixpoint
-            break
-        n_edges = n_new
-        edges = survivors.select("u", "v")
-        if n_edges == 0:
-            break
-    else:
-        # exhausted max_rounds with the peel still cascading: the edge
-        # set is NOT yet a k-truss — surface it instead of shipping a
-        # silently non-converged result (the oracle's fixed unroll
-        # would diverge from it with no diagnostic otherwise)
+    # one peel per round; the cut's row count is the convergence check
+    # (survivors ⊆ edges, so an equal count is the fixpoint), and an
+    # empty survivor set halts the loop on its own
+    spark = graph.vertices.sparkSession
+    with RoundLoop("ktruss", spark, max_rounds=max_rounds) as loop:
+        for _ in loop:
+            # edges with zero triangles fall out of the aggregation and
+            # are thereby dropped — correct for every k >= 3 (0 < k-2)
+            survivors, row = loop.cut(
+                _wedge_support(edges).where(F.col("support") >= k - 2)
+            )
+            loop.finish(converged=row["rows"] == n_edges)
+            n_edges = row["rows"]
+            edges = survivors.select("u", "v")
+    if loop.halt_reason == "max_rounds":
+        # the peel is still cascading: the edge set is NOT yet a
+        # k-truss — surface it instead of shipping a silently
+        # non-converged result (the oracle's fixed unroll would diverge
+        # from it with no diagnostic otherwise)
         warnings.warn(
             f"ktruss(k={k}) exhausted max_rounds={max_rounds} before the "
             "peel converged; the returned edge set is not a fixpoint",
             RuntimeWarning,
             stacklevel=2,
         )
-    return TrussResult(edges=survivors, rounds=rounds)
+    return TrussResult(edges=survivors, rounds=loop.round + 1)

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hugegraph_computer_spark.engine.rounds import RoundLoop
+
 BLOCK_SCHEMA = T.StructType(
     [
         T.StructField("block_key", T.IntegerType(), False),
@@ -171,51 +173,42 @@ def pagerank_csr(
     spark = g.vertices.sparkSession
     blocks = build_csr_blocks(g.edges, num_blocks, chunk_edges).persist()
     blocks.count()
-    deg = g.out_degrees().persist()
     n = g.num_vertices
-
-    state = deg.select(
-        "id",
-        "outdeg",
-        F.lit(1.0 / n).alias("rank"),
-        F.lit(1.0 / n).alias("prev_rank"),
-    ).localCheckpoint(eager=True)
-
-    def aggs(df):
-        row = df.agg(
-            F.sum("rank").alias("cum"),
-            F.sum(F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(0.0)).alias(
-                "dang"
-            ),
-            F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("l1"),
-        ).collect()[0]
-        return row["cum"], row["dang"], row["l1"]
-
-    cum, dang, _ = aggs(state)
-    s = 0
-    while True:
-        if s >= max_supersteps - 1:
-            break
-        if s > 1 and l1 <= l1_tol:  # noqa: F821
-            break
-        s += 1
-        incoming = csr_gather_contrib(
-            blocks, state.select("id", "rank", "outdeg"), num_blocks
-        )
-        incoming = incoming.groupBy("dst").agg(F.sum("msg_sum").alias("msg_sum"))
-        joined = state.join(incoming, state["id"] == incoming["dst"], "left")
-        new_rank = (
-            (F.lit(dang / n) + F.coalesce(F.col("msg_sum"), F.lit(0.0)))
-            * F.lit(1.0 - alpha)
-            + F.lit(alpha / n)
-        ) / F.lit(cum)
-        state = joined.select(
-            state["id"].alias("id"),
-            "outdeg",
-            new_rank.alias("rank"),
-            state["rank"].alias("prev_rank"),
-        ).localCheckpoint(eager=False)
-        cum, dang, l1 = aggs(state)
+    # an empty graph has no ranks to seed; its one superstep halts on
+    # the empty state
+    init = 1.0 / n if n else 0.0
+    # the Graph owns its memoized out-degree cache: read it, never
+    # release it
+    state = g.out_degrees().select(
+        "id", "outdeg", F.lit(init).alias("rank"), F.lit(init).alias("prev_rank")
+    )
+    with RoundLoop("pagerank_csr", spark, max_rounds=max_supersteps) as loop:
+        for s in loop:
+            if s > 0:
+                incoming = csr_gather_contrib(
+                    blocks, state.select("id", "rank", "outdeg"), num_blocks
+                ).groupBy("dst").agg(F.sum("msg_sum").alias("msg_sum"))
+                joined = state.join(incoming, state["id"] == incoming["dst"], "left")
+                new_rank = (
+                    (F.lit(row["dang"] / n) + F.coalesce(F.col("msg_sum"), F.lit(0.0)))
+                    * F.lit(1.0 - alpha)
+                    + F.lit(alpha / n)
+                ) / F.lit(row["cum"])
+                state = joined.select(
+                    state["id"].alias("id"),
+                    "outdeg",
+                    new_rank.alias("rank"),
+                    state["rank"].alias("prev_rank"),
+                )
+            state, row = loop.cut(
+                state,
+                cum=F.sum("rank"),
+                dang=F.sum(
+                    F.when(F.col("outdeg") == 0, F.col("rank")).otherwise(0.0)
+                ),
+                l1=F.sum(F.abs(F.col("rank") - F.col("prev_rank"))),
+            )
+            # PageRank4Master.java:99-104
+            loop.finish(converged=s > 1 and row["l1"] <= l1_tol)
     blocks.unpersist()
-    deg.unpersist()
-    return state.select("id", "rank"), s + 1
+    return state.select("id", "rank"), loop.round + 1

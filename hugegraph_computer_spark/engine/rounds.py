@@ -3,9 +3,15 @@
 The reference runs every superstep through one master loop, which merges
 the aggregators and decides convergence
 (MasterService.finishedIteration, MasterService.java:353-364). Here
-that loop is `RoundLoop`: PregelRunner, cc_fast and HITS all iterate
-through it, so they share one lineage cut, one planner decision, one
-cancel point and one per-round metrics record.
+that loop is `RoundLoop`, and every loop with a halt test iterates
+through it: PregelRunner, cc_fast, HITS, rings, links, the three
+betweenness loops (flooding, Brandes, the sampled forward phase),
+closeness, k-truss and pagerank_csr. They share one lineage cut, one
+planner decision, one cancel point and one per-round metrics record.
+Frontier operators follow PregelRunner's shape: round 0 cuts the seed
+frontier, each later round cuts the next one, and an empty frontier
+halts the loop. Their accumulators are lazy cuts that the next round's
+action stores. louvain, anf and the random walks keep their own loops.
 
 Per round:
     plan   the caller builds the round's DataFrame (lazy, no job)

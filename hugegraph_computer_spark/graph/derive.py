@@ -414,11 +414,12 @@ class Graph:
         # windows). The dense tables are scanned O(supersteps) times,
         # so storage format beats the per-step re-analysis of this
         # (small: two joins over pinned inputs) plan subtree.
-        # id remap is 1:1 over endpoints that are all vertices, so the
-        # edge count carries over unchanged
+        # the inner joins drop edges whose endpoint is not a vertex, so
+        # the planner's edge count is taken from the dense edges; the
+        # count fills the cache the first superstep would fill anyway
+        edges = edges.persist()
         dense = Graph(
-            verts.persist(), edges.persist(), self.partitions, self._nv,
-            _ne=self._ne,
+            verts.persist(), edges, self.partitions, self._nv, _ne=edges.count()
         )
         return dense, mapping
 

@@ -35,3 +35,11 @@ def test_pagerank_csr_matches_dataframe_impl(sf_graph):
     worst = max(abs(a[k] - b[k]) for k in a)
     assert worst < 1e-9, worst
     assert np.isclose(sum(b.values()), 1.0, rtol=1e-3)
+
+
+def test_pagerank_csr_keeps_the_graph_degree_cache(sf_graph):
+    """The memoized out-degree table belongs to the Graph: PageRank,
+    LPA, SSSP and KCore on the same graph read it after pagerank_csr."""
+    assert sf_graph.out_degrees().is_cached
+    pagerank_csr(sf_graph, max_supersteps=2, num_blocks=4)
+    assert sf_graph.out_degrees().is_cached

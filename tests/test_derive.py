@@ -287,3 +287,20 @@ def test_dense_bucketed_ingest_feeds_pagerank(spark):
     finally:
         for t in ("vertices", "edges", "mapping"):
             spark.sql(f"DROP TABLE IF EXISTS {prefix}_{t}")
+
+
+def test_densify_counts_the_edges_it_keeps(spark, sf_graph):
+    """densify's inner joins drop an edge whose endpoint is not a
+    vertex; the planner's edge count must describe the dense edges."""
+    from hugegraph_computer_spark.graph import Graph
+
+    v = spark.createDataFrame([("a",), ("b",)], sf_graph.vertices.schema)
+    e = spark.createDataFrame(
+        [("a", "b", 1.0, "reply"), ("a", "ghost", 1.0, "reply")],
+        sf_graph.edges.schema,
+    )
+    dense, mapping = Graph(v, e, partitions=2, _nv=2, _ne=2).densify()
+    assert dense._ne == dense.edges.count() == 1
+    dense.vertices.unpersist()
+    dense.edges.unpersist()
+    mapping.unpersist()

@@ -5,15 +5,27 @@ and halt metrics."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from hugegraph_computer_spark.algorithms import Lpa, PageRank, Wcc, connected_components
+from hugegraph_computer_spark.algorithms.betweenness import (
+    betweenness_brandes,
+    betweenness_brandes_sampled,
+    betweenness_centrality,
+)
+from hugegraph_computer_spark.algorithms.closeness import closeness_centrality
 from hugegraph_computer_spark.algorithms.hits import hits
 from hugegraph_computer_spark.algorithms.kcore import KCore
+from hugegraph_computer_spark.algorithms.links import links
 from hugegraph_computer_spark.algorithms.ppr import PersonalPageRank
+from hugegraph_computer_spark.algorithms.rings import rings_detection
 from hugegraph_computer_spark.algorithms.sssp import Sssp
+from hugegraph_computer_spark.algorithms.truss import ktruss
 from hugegraph_computer_spark.engine import PregelRunner
+from hugegraph_computer_spark.engine.csr import pagerank_csr
 from hugegraph_computer_spark.graph import Graph
 from hugegraph_computer_spark.oracles import py_reference as oracle
+from tests.test_linkgraph_extras import _python_ktruss
 
 NODES = ["a", "b", "c"]
 PHASES = {"plan", "checkpoint", "action", "messages"}
@@ -91,6 +103,90 @@ def test_hits_runs_its_fixed_rounds_on_bare_graphs(bare):
         assert (res.metrics["halt_reason"], res.supersteps) == ("max_rounds", 10)
     scores = {r["id"]: (r["auth"], r["hub"]) for r in res.state.collect()}
     assert scores == {v: (0.0, 0.0) for v in nodes}
+
+
+def _per_vertex(key):
+    return lambda df: {r["id"]: r[key] for r in df.collect()}
+
+
+def _ktruss(g):
+    res = ktruss(g, k=4)
+    return {(r["u"], r["v"]): r["support"] for r in res.edges.collect()}, res.rounds
+
+
+def _pagerank_csr(g):
+    state, steps = pagerank_csr(g, num_blocks=2)
+    return _per_vertex("rank")(state), steps
+
+
+def _pagerank_oracle(nodes):
+    # the empty graph runs one superstep on the empty state
+    return oracle.pagerank(nodes, []) if nodes else ({}, 1)
+
+
+STARTS, ENDS = {"a", "b"}, {"a"}
+
+# name -> (run on a graph -> (result, round count or None),
+#          oracle over the nodes of an edgeless graph -> the same pair)
+OPERATORS = {
+    "rings": (
+        lambda g: ({tuple(r["ring"]) for r in rings_detection(g).collect()}, None),
+        lambda n: (oracle.rings(n, []), None),
+    ),
+    "links": (
+        lambda g: (
+            {
+                tuple(r["path"])
+                for r in links(
+                    g, F.col("id").isin(*STARTS), F.col("id").isin(*ENDS)
+                ).collect()
+            },
+            None,
+        ),
+        lambda n: (oracle.links_paths(n, [], STARTS & set(n), ENDS), None),
+    ),
+    "betweenness": (
+        lambda g: (_per_vertex("betweenness")(betweenness_centrality(g)), None),
+        lambda n: (oracle.betweenness(n, []), None),
+    ),
+    "betweenness_brandes": (
+        lambda g: (_per_vertex("betweenness")(betweenness_brandes(g)), None),
+        lambda n: (oracle.betweenness(n, []), None),
+    ),
+    "betweenness_sampled": (
+        lambda g: (
+            _per_vertex("betweenness")(betweenness_brandes_sampled(g, 1.0)),
+            None,
+        ),
+        lambda n: (oracle.betweenness(n, []), None),
+    ),
+    "closeness": (
+        lambda g: (
+            {
+                r["id"]: (r["n_reachable"], r["centrality"])
+                for r in closeness_centrality(g).collect()
+            },
+            None,
+        ),
+        lambda n: (oracle.closeness(n, []), None),
+    ),
+    "ktruss": (_ktruss, lambda n: (_python_ktruss([], 4), 1)),
+    "pagerank_csr": (_pagerank_csr, _pagerank_oracle),
+}
+
+
+@pytest.mark.parametrize("name", sorted(OPERATORS))
+def test_operators_halt_on_bare_graphs(bare, name):
+    """Every frontier operator on RoundLoop halts on the empty and the
+    edgeless graph with the oracle's values; the operators that report
+    a round count stop within 3 rounds, at the oracle's count."""
+    _, nodes, g = bare
+    run, want = OPERATORS[name]
+    got, rounds = run(g)
+    expected, expected_rounds = want(nodes)
+    assert got == expected
+    assert rounds == expected_rounds
+    assert rounds is None or rounds <= 3
 
 
 def _assert_records(history, metrics):

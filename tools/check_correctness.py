@@ -17,7 +17,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from hugegraph_computer_spark.session import get_spark
+from hugegraph_computer_spark.session import default_cpus, get_spark
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -49,7 +49,10 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
-    spark = get_spark(app_name="check", master="local[8]", shuffle_partitions=16)
+    cpus = default_cpus()
+    spark = get_spark(
+        app_name="check", master=f"local[{cpus}]", shuffle_partitions=2 * cpus
+    )
     qs, oq = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
