@@ -137,7 +137,7 @@ def connected_components(graph, max_rounds: int = 50) -> CCResult:
     # a lineage-free RDD instead of re-planning the union-of-projections.
     # Its row count (~2x the directed edges) is what the rounds iterate,
     # so it is what the planner reads.
-    sym, n_sym = pin(symmetrize(graph.edges))
+    sym, sym_row = pin(symmetrize(graph.edges))
 
     state = graph.vertices.select("id", F.col("id").alias("comp"))
     # round counts are value-driven (exact integer changed-count), so
@@ -146,7 +146,7 @@ def connected_components(graph, max_rounds: int = 50) -> CCResult:
         "wcc_fast",
         graph.vertices.sparkSession,
         max_rounds=max_rounds,
-        rows=n_sym,
+        rows=sym_row["rows"],
         partitions=graph.partitions,
     )
     with loop:

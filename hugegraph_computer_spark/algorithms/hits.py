@@ -60,7 +60,7 @@ def hits(graph, supersteps: int = 10) -> HitsResult:
     """
     # the deduplicated edges are what every round iterates, so their
     # count (not the directed multi-edge count) feeds the planner
-    de, n_de = pin(graph.edges.select("src", "dst").dropDuplicates(["src", "dst"]))
+    de, de_row = pin(graph.edges.select("src", "dst").dropDuplicates(["src", "dst"]))
     vertices = graph.vertices.select("id")
     state = vertices.select(
         "id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
@@ -69,7 +69,7 @@ def hits(graph, supersteps: int = 10) -> HitsResult:
         "hits",
         graph.vertices.sparkSession,
         max_rounds=supersteps,
-        rows=n_de,
+        rows=de_row["rows"],
         partitions=graph.partitions,
     )
     with loop:

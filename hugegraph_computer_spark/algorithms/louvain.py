@@ -35,7 +35,15 @@ Structure per level:
 
 Every step is groupBy/join/window on O(E) rows — no collect of the
 graph, no per-row Python; at 100 TB each round is two shuffles
-(nbr-community gather + community totals) on the (src) key.
+(nbr-community gather + community totals) on the (src) key. A round
+evaluates its plan once: one `pin` of the updated assignment, whose
+agg action also returns the round's move count. A round is two actions
+(the pin's agg and its checkpoint) whether or not anything moved, so
+an idle round costs one action more than a bare count of the moves
+would. 2m is read off each level's degree-table cut, each per-level
+modularity is one action (2m = sum tot comes back with sum in and
+sum tot^2), and the singleton baseline rides on the action that stores
+the level-0 adjacency.
 """
 
 from __future__ import annotations
@@ -43,7 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.engine.rounds import pin
+from hugegraph_computer_spark.engine.rounds import cut, pin
 
 _EPS = 1e-12
 
@@ -75,14 +83,24 @@ def _degrees(adj: DataFrame) -> DataFrame:
     return adj.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
 
 
+def _level0(edges: DataFrame) -> tuple[DataFrame, float]:
+    """(adj0, singleton modularity): the level-0 adjacency as a lazy
+    cut, stored by ONE action over its degrees that returns 2m = sum k
+    and sum k^2. With no self-loops at level 0 the singleton partition
+    has in(c) = 0, so its modularity is -sum k^2 / (2m)^2."""
+    adj0 = _undirected_adj(edges).localCheckpoint(eager=False)
+    row = _degrees(adj0).agg(
+        F.sum("k").alias("m2"), F.sum(F.col("k") * F.col("k")).alias("k_sq")
+    ).collect()[0]
+    m2 = row["m2"]
+    return adj0, (-row["k_sq"] / (m2 * m2) if m2 else 0.0)
+
+
 def modularity(adj: DataFrame, comm: DataFrame) -> float:
     """Q = sum_c [ in(c)/2m - (tot(c)/2m)^2 ] over the directed-row
-    adjacency (in(c) counts both directions; self-loop rows count once)."""
-    k = _degrees(adj)
-    ck = comm.join(k, "id")
-    m2 = ck.agg(F.sum("k")).collect()[0][0]
-    if not m2:
-        return 0.0
+    adjacency (in(c) counts both directions; self-loop rows count once),
+    with 2m = sum_c tot(c). One action returns sum in, sum tot and
+    sum tot^2; the driver combines them."""
     cs = comm.select(F.col("id").alias("src"), F.col("c").alias("c_src"))
     cd = comm.select(F.col("id").alias("dst"), F.col("c").alias("c_dst"))
     intra = (
@@ -92,29 +110,29 @@ def modularity(adj: DataFrame, comm: DataFrame) -> float:
         .groupBy("c_src")
         .agg(F.sum("w").alias("in_w"))
     )
-    tots = ck.groupBy("c").agg(F.sum("k").alias("tot"))
+    tots = comm.join(_degrees(adj), "id").groupBy("c").agg(F.sum("k").alias("tot"))
     row = (
         tots.join(intra, tots["c"] == intra["c_src"], "left")
         .agg(
-            F.sum(
-                F.coalesce(F.col("in_w"), F.lit(0.0)) / F.lit(m2)
-                - (F.col("tot") / F.lit(m2)) ** 2
-            )
+            F.sum("in_w").alias("in_w"),
+            F.sum("tot").alias("m2"),
+            F.sum(F.col("tot") * F.col("tot")).alias("tot_sq"),
         )
-        .collect()[0][0]
+        .collect()[0]
     )
-    return float(row)
+    m2 = row["m2"]
+    if not m2:
+        return 0.0
+    return float((row["in_w"] or 0.0) / m2 - row["tot_sq"] / (m2 * m2))
 
 
-def _local_move_phase(
-    adj: DataFrame, max_rounds: int
-) -> tuple[DataFrame, int]:
+def _local_move_phase(adj: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
     """Parallel local moves until a full parity sweep moves nothing.
     Returns (comm(id, c), moves_made)."""
     nbr = adj.where(F.col("src") != F.col("dst"))  # self-loops fixed wrt moves
-    k = _degrees(adj).persist()
-    m2 = k.agg(F.sum("k")).collect()[0][0]
-    comm, _ = pin(k.select("id", F.col("id").alias("c")))
+    k, row = cut(_degrees(adj), m2=F.sum("k"))
+    m2 = row["m2"]
+    comm = k.select("id", F.col("id").alias("c"))
 
     total_moves = 0
     idle_rounds = 0
@@ -164,19 +182,24 @@ def _local_move_phase(
             .where((F.col("_rn") == 1) & (F.col("gain") > _EPS))
             .select("id", F.col("c_n").alias("c_new"))
         )
-        n_moves = best.count()
-        if n_moves == 0:
+        # the round's one plan evaluation: the pin's action stores the
+        # updated assignment and counts the moves
+        upd, row = pin(
+            comm.join(best, "id", "left").select(
+                "id",
+                F.coalesce("c_new", "c").alias("c"),
+                F.col("c_new").isNotNull().alias("moved"),
+            ),
+            moves=F.count_if("moved"),
+        )
+        comm = upd.select("id", "c")
+        if row["moves"] == 0:
             idle_rounds += 1
             if idle_rounds >= 2:  # both parities idle -> fixpoint
                 break
             continue
         idle_rounds = 0
-        total_moves += n_moves
-        comm, _ = pin(
-            comm.join(best, "id", "left")
-            .select("id", F.coalesce("c_new", "c").alias("c"))
-        )
-    k.unpersist()
+        total_moves += row["moves"]
     return comm, total_moves
 
 
@@ -203,38 +226,36 @@ def louvain(
     """Returns (id, community) for every vertex; community = min member
     id (deterministic labels). Vertices with no edges stay singletons.
     `history`, when given, receives one {level, modularity, moves} dict
-    per level (modularity measured on the ORIGINAL graph)."""
-    adj0 = _undirected_adj(g.edges).persist()
-    adj0.count()
+    per level (modularity measured on the ORIGINAL graph).
+    `max_levels=0` returns the singleton partition."""
+    if max_levels <= 0:
+        return g.vertices.select("id", F.col("id").alias("community"))
+    adj0, prev_q = _level0(g.edges)
 
     # membership(orig id -> current community), composed across levels
     membership = None
     adj = adj0
-    prev_q = modularity(adj0, adj0.select(F.col("src").alias("id")).distinct()
-                        .select("id", F.col("id").alias("c")))
-    for _level in range(max_levels):
+    for level in range(max_levels):
         comm, moves = _local_move_phase(adj, max_rounds_per_level)
         if membership is None:
             membership = comm
         else:
             lift = comm.select(F.col("id").alias("c"), F.col("c").alias("c2"))
-            membership, _ = pin(
+            membership, _ = cut(
                 membership.join(lift, "c").select("id", F.col("c2").alias("c"))
             )
         q = modularity(adj0, membership)
         if history is not None:
-            history.append({"level": _level, "modularity": q, "moves": moves})
-        if moves == 0 or q - prev_q < min_gain:
-            prev_q = max(prev_q, q)
+            history.append({"level": level, "modularity": q, "moves": moves})
+        if moves == 0 or q - prev_q < min_gain or level == max_levels - 1:
             break
         prev_q = q
-        adj, _ = pin(_coarsen(adj, comm))
+        adj, _ = cut(_coarsen(adj, comm))
 
     # deterministic labels: community := min original member id;
     # isolated vertices (no adjacency rows) are their own singleton
     lab = membership.groupBy("c").agg(F.min("id").alias("community"))
     out = membership.join(lab, "c").select("id", "community")
-    adj0.unpersist()
     return (
         g.vertices.join(out, "id", "left")
         .select("id", F.coalesce("community", "id").alias("community"))

@@ -411,6 +411,8 @@ def louvain(
     """
     from collections import defaultdict as _dd
 
+    if max_levels <= 0:
+        return {v: v for v in vertices}
     # _undirected_adj: both-direction rows, parallel edges merged,
     # self-loops dropped at level 0
     adj: dict = _dd(float)

@@ -17,12 +17,14 @@ from hugegraph_computer_spark.algorithms.closeness import closeness_centrality
 from hugegraph_computer_spark.algorithms.hits import hits
 from hugegraph_computer_spark.algorithms.kcore import KCore
 from hugegraph_computer_spark.algorithms.links import links
+from hugegraph_computer_spark.algorithms.louvain import louvain
 from hugegraph_computer_spark.algorithms.ppr import PersonalPageRank
 from hugegraph_computer_spark.algorithms.rings import rings_detection
 from hugegraph_computer_spark.algorithms.sssp import Sssp
 from hugegraph_computer_spark.algorithms.truss import ktruss
 from hugegraph_computer_spark.engine import PregelRunner
 from hugegraph_computer_spark.engine.csr import pagerank_csr
+from hugegraph_computer_spark.engine.rounds import pin
 from hugegraph_computer_spark.graph import Graph
 from hugegraph_computer_spark.oracles import py_reference as oracle
 from tests.test_linkgraph_extras import _python_ktruss
@@ -187,6 +189,24 @@ def test_operators_halt_on_bare_graphs(bare, name):
     assert got == expected
     assert rounds == expected_rounds
     assert rounds is None or rounds <= 3
+
+
+def test_louvain_on_bare_graphs(bare):
+    """louvain keeps its own loop (its round state needs `pin`); on the
+    empty and the edgeless graph it runs one idle level and returns
+    the oracle's singletons."""
+    _, nodes, g = bare
+    history: list = []
+    got = {r["id"]: r["community"] for r in louvain(g, history=history).collect()}
+    assert got == oracle.louvain([], nodes)
+    assert history == [{"level": 0, "modularity": 0.0, "moves": 0}]
+
+
+def test_pin_returns_rows_and_named_aggregates(spark):
+    df = spark.range(5).withColumn("x", F.col("id") * 2)
+    out, row = pin(df, s=F.sum("x"))
+    assert (row["rows"], row["s"]) == (5, 20)
+    assert sorted(r["x"] for r in out.collect()) == [0, 2, 4, 6, 8]
 
 
 def _assert_records(history, metrics):
